@@ -27,325 +27,6 @@ from noaa_etl_daily_spark.registry import load_all  # noqa: E402
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 FLAGSHIP = "agg_groupby_multi"
 
-#: Keys that have never received a GREEN driver CORRECTNESS row (the
-#: driver samples ~50 queries per round, in ``queries()`` iteration
-#: order).  Surfaced first so the certification gap closes; everything
-#: already green in a prior round's CORRECTNESS_r*.json is ordered
-#: last.  Order within this list: (1) the r3 canonicalizer-crash keys,
-#: now fixed, so the record turns green; (2) pipeline_* / sql_* (the
-#: likeliest real-user queries); (3) the rest of the never-sampled set.
-_PRIORITY = [
-    # round-6 lead (VERDICT r5 task 1): the r4 analytics shelf — the
-    # longest-waiting never-driver-sampled keys — surfaces first
-    "pipeline_basket_affinity",
-    "agg_gini_concentration",
-    "agg_benford_digit_quality",
-    "evt_inter_arrival_stats",
-    "llm_embed_pq_codebook",
-    "llm_sim_pq_adc_topk",
-    "llm_minhash_calibration",
-    # round-5 fifth wave (engine-surface: SQL UDFs/TVF/variables,
-    # _metadata lineage, observe() QC, closed-form OLS, feature hashing)
-    "sql_udf_create_function",
-    "sql_table_function_create",
-    "sql_session_variables",
-    "scan_file_metadata_column",
-    "validate_observe_metrics",
-    "agg_linear_regression_normal_eq",
-    "llm_feature_hashing_vector",
-    # round-5 fourth wave (this session)
-    "evt_lead_lag_ccf",
-    "evt_runs_test_randomness",
-    "agg_gumbel_block_maxima",
-    "agg_cramers_v",
-    # round-5 scale-safe twins (operators/scale_rank.py): new keys whose
-    # driver certification proves the distributed-rank rewrites are
-    # bit-identical to their originals (same oracle SQL)
-    "agg_rfm_segmentation_atscale",
-    "agg_lorenz_curve_atscale",
-    "llm_eval_winrate_atscale",
-    "agg_ks_two_sample_atscale",
-    "llm_token_budget_selection_atscale",
-    # round-5 new operators (TPC-H Q21/Q11/Q20 completing all 22 shapes,
-    # gaps-and-islands, log2-histogram percentiles)
-    "pipeline_waiting_suppliers",
-    "pipeline_important_stock",
-    "pipeline_promo_part_suppliers",
-    "win_activity_islands",
-    "agg_log2_histogram_percentiles",
-    "agg_dp_noised_counts",
-    "llm_semdedup_cells",
-    "graph_pagerank_brands",
-    "llm_bpe_train_merges",
-    "sink_bloom_filter_layout",
-    "agg_neyman_allocation",
-    "agg_poisson_bootstrap_ci",
-    "evt_markov_removal_attribution",
-    "scan_parquet_ignore_corrupt",
-    "agg_mann_whitney_u",
-    "llm_score_calibration_ece",
-    "evt_sequential_sprt",
-    "agg_welch_ttest",
-    "evt_cuped_variance_reduction",
-    "llm_segment_dedup_global",
-    "agg_benjamini_hochberg_fdr",
-    "agg_ab_power_mde",
-    "evt_theil_sen_trend",
-    "sink_manifest_atomic_publish",
-    "evt_shapley_attribution",
-    "agg_beta_binomial_smoothing",
-    "evt_fourier_daily_harmonics",
-    "evt_pit_training_features",
-    "evt_holt_linear_forecast",
-    "graph_cosupply_projection",
-    "dedup_er_blocked_pairs",
-    "evt_diff_in_diff",
-    "agg_anova_oneway",
-    "agg_jackknife_ratio_variance",
-    "llm_dataset_mixture_weights",
-    "agg_spearman_rank_corr",
-    "evt_uplift_qini_deciles",
-    "evt_rolling_correlation",
-    "llm_repeated_substring_census",
-    "llm_capture_recapture_estimate",
-    "llm_weighted_reservoir_sample",
-    "evt_path_trigrams",
-    "evt_offpolicy_ips_snips",
-    "agg_mad_robust_outliers",
-    "llm_cdc_chunk_census",
-    "agg_tukey_hsd_pairs",
-    "llm_kneser_ney_bigram",
-    "evt_competing_risks_cif",
-    "agg_mcnemar_paired",
-    "llm_context_bucket_waste",
-    "evt_hurst_exponent",
-    "pipeline_cohort_repeat_purchase",
-    "evt_extreme_value_pot",
-    "agg_rank_biased_overlap",
-    "evt_chain_ladder_projection",
-    # r3 red rows, fixed in r4 (array outputs now serialized)
-    "fn_array_basic",
-    "llm_multimodal_decode_features",
-    "fn_array_setops",
-    # pipelines (TPC-H-shaped end-to-end queries)
-    "pipeline_shipping_priority",
-    "pipeline_regional_volume",
-    "pipeline_top_supplier",
-    "pipeline_promo_effect",
-    "pipeline_market_share",
-    "pipeline_min_cost_supplier",
-    "pipeline_order_priority_check",
-    "pipeline_nation_trade_volume",
-    "pipeline_returned_top_customers",
-    "pipeline_large_volume_customers",
-    "pipeline_revenue_forecast",
-    # SQL surface
-    "sql_scalar_subquery_correlated",
-    "sql_exists_not_exists",
-    "sql_lateral_topk",
-    "sql_not_in_null_aware",
-    "sql_values_inline_dim",
-    "sql_cached_cte_reuse",
-    # joins / scans / sinks
-    "join_range_interval_bucketed",
-    "join_asof_tolerance",
-    "join_asof_forward",
-    "join_bucketed_colocated",
-    "join_partition_pruned_dynamic",
-    "join_skew_salted",
-    "scan_python_datasource",
-    "scan_xml_roundtrip",
-    "scan_csv_multiline_quoted",
-    "scan_orc_roundtrip",
-    "scan_partition_pruned_static",
-    "scan_csv_gzip_roundtrip",
-    "scan_merge_schema_evolution",
-    "sink_compact_small_files",
-    "merge_upsert_daily",
-    "sink_range_sorted_layout",
-    "merge_scd2_cdc_apply",
-    # windows
-    "win_percent_rank_cume_dist",
-    "win_running_distinct_count",
-    "win_nth_value",
-    "win_longest_streak",
-    "win_pareto_8020",
-    "win_year_over_year",
-    # aggregates
-    "agg_mode_deterministic",
-    "agg_weighted_median",
-    "agg_skew_kurtosis",
-    # events
-    "evt_rate_limit_burst",
-    "evt_session_attribution",
-    "evt_experiment_ab_analysis",
-    "evt_cumulative_new_users",
-    "evt_transition_matrix",
-    "evt_seasonal_profile",
-    "evt_resurrection_analysis",
-    "evt_bounce_rate_daily",
-    "evt_power_users",
-    "validate_expectations",
-    # scalar functions
-    "fn_bitwise",
-    "fn_levenshtein_fuzzy_match",
-    "fn_haversine_distance",
-    "fn_variant_json",
-    "fn_collation_lcase",
-    "fn_try_arithmetic",
-    "fn_string_mask",
-    "fn_string_codec",
-    "fn_url_parse",
-    "fn_map_higher_order",
-    "fn_json_roundtrip_nested",
-    "fn_string_format",
-    # udf / udtf variants
-    "udtf_cogrouped_pandas",
-    "udtf_python_native",
-    "udtf_map_in_arrow",
-    "udf_pandas_iter",
-    "udf_arrow_optimized",
-    # llm family
-    "llm_embed_matryoshka_truncate",
-    "llm_embed_norm_outliers",
-    "llm_anchor_negative_triplets",
-    "llm_dedup_containment",
-    "llm_quality_composite_filter",
-    "llm_ngram_novelty",
-    # round-4 additions
-    "llm_url_canonicalize_dedup",
-    "llm_multimodal_audio_chunks",
-    "fn_interval_arithmetic",
-    "fn_timezone_convert",
-    "join_null_safe_eq",
-    "sql_distinct_on",
-    "evt_decay_weighted_value",
-    "evt_funnel_time_to_convert",
-    "llm_text_char_entropy",
-    "llm_cross_source_overlap",
-    "llm_bigram_lm",
-    "llm_vocab_coverage",
-    "sink_zorder_layout",
-    "pipeline_customer_distribution",
-    "pipeline_small_qty_revenue",
-    "pipeline_disjunctive_filter",
-    "llm_safety_keyword_filter",
-    "llm_winnowing_fingerprint",
-    "fn_regexp_extract_all",
-    "evt_activity_autocorr",
-    "sql_parameterized_query",
-    "evt_peak_concurrency",
-    "win_locf_gap_fill",
-    "fn_aes_roundtrip",
-    "join_scd2_temporal",
-    "sql_transpose",
-    "scan_text_lines",
-    "pipeline_dormant_customers",
-    "pipeline_supplier_part_census",
-    "mv_incremental_refresh",
-    "join_asof_nearest",
-    "scan_json_multiline",
-    "agg_geometric_mean",
-    "evt_segment_transitions",
-    "udtf_table_argument",
-    "llm_length_histogram",
-    "pipeline_corpus_curation",
-    "llm_sim_topk_cosine_local_prune",
-    "fn_datetime_format_patterns",
-    "win_rolling_median",
-    "sink_parquet_zstd",
-    "evt_slo_burn_rate",
-    "join_shuffle_hash_hint",
-    "llm_skipgram_pairs",
-    "llm_collocation_pmi",
-    "evt_dow_hour_heatmap",
-    "evt_new_vs_returning_daily",
-    "llm_readability_complexity",
-    "join_bloom_prefilter",
-    "win_ewma_bounded",
-    "evt_business_days_sla",
-    "sql_execute_immediate",
-    "fn_geohash_encode",
-    "llm_bpe_merge_step",
-    "validate_profile_census",
-    "agg_crosstab_contingency",
-    "agg_winsorized_mean",
-    "llm_kanonymity_census",
-    "evt_calendar_dim_join",
-    "fn_luhn_checksum",
-    "agg_mutual_information",
-    "llm_negative_sampling",
-    "sql_distribute_cluster_by",
-    "win_quantile_normalize",
-    "llm_token_budget_selection",
-    "evt_cusum_changepoint",
-    "agg_countmin_sketch",
-    "llm_preference_pairs",
-    "agg_wilson_interval",
-    "pipeline_product_profit",
-    "pipeline_shipmode_priority",
-    "agg_ab_srm_check",
-    "fn_ip_subnet_rollup",
-    "fn_rounding_modes",
-    "agg_percentile_disc",
-    "llm_corpus_diff_census",
-    "fn_xpath_extract",
-    "llm_topic_keywords_chi2",
-    "evt_alert_debounce",
-    "fn_uuid_deterministic",
-    "graph_triangle_census",
-    "llm_span_annotation_offsets",
-    "agg_fk_integrity_audit",
-    "win_weighted_moving_avg",
-    "agg_stratified_topn_sample",
-    "evt_cohort_revenue_ltv",
-    "llm_bloom_decontaminate",
-    "evt_control_chart",
-    "evt_linear_attribution",
-    "evt_seasonal_decompose",
-    "llm_sft_pair_format",
-    "agg_data_freshness_sla",
-    "evt_audience_overlap_daily",
-    "llm_source_priority_dedup",
-    "fn_format_bytes_human",
-    "agg_rfm_segmentation",
-    "llm_interpolated_lm_ppl",
-    "evt_distribution_drift_jsd",
-    "llm_embedding_drift_check",
-    "llm_watermark_detection",
-    "evt_bot_regularity_detection",
-    "evt_survival_km",
-    "pipeline_daily_kpis",
-    "scan_parquet_footer_census",
-    "llm_multimodal_image_tiles",
-    "agg_ks_two_sample",
-    "llm_annotation_kappa",
-    "llm_prefix_cache_analysis",
-    "agg_theil_index",
-    "evt_type_correlation_matrix",
-    "agg_lorenz_curve",
-    "evt_max_drawdown",
-    "fn_tiered_pricing",
-    "join_fallback_lookup_chain",
-    "evt_anomaly_iqr_fences",
-    "llm_rouge_bleu_eval",
-    "evt_forecast_backtest",
-    "agg_population_stability_index",
-    "llm_eval_winrate",
-    "agg_harmonic_mean",
-    "llm_dup_cluster_size_dist",
-    "evt_dn_retention",
-    "llm_zipf_exponent_fit",
-    "fn_trigram_similarity",
-    # never-sampled rows-only / special-scan keys: sampled last so a
-    # no_oracle (or byte-fidelity) row lands in the record at least once
-    "scan_binary_files",
-    "agg_approx_quantile",
-    "agg_theta_sketch_setops",
-    "agg_kll_quantile_sketch",
-    "scan_csv_corrupt_permissive",
-]
-
 
 def _cert_rounds() -> dict[str, int]:
     """Earliest round with a GREEN driver CORRECTNESS row, per key.  A
@@ -404,40 +85,20 @@ def _certified() -> set[str]:
     return set(_cert_rounds())
 
 
-def _family_rank(name: str) -> int:
-    for rank, prefix in enumerate(
-        ("llm_", "udf_", "udaf_", "udtf_", "pipeline_", "fn_")
-    ):
-        if name.startswith(prefix):
-            return rank
-    return 6
-
-
 def _ordered():
-    """Registry re-ordered so never-driver-certified keys come first.
+    """Registry re-ordered by earliest GREEN certification.
 
-    Within the uncertified set: SURVEY §2 inventory keys first (in
-    ``_PRIORITY`` order), then by operator family (llm, udf, pipeline,
-    fn, rest), preserving registration order within a family.  The
-    already-certified tail is ordered OLDEST certification first
-    (earliest green round, then registration order): once the backlog
-    fits inside one ~50-key driver sample, the spare slots re-certify
-    the stalest records — r1 certifications get re-proven against the
-    current tree before newer ones do.
+    ~50 queries per round are sampled in ``queries()`` iteration
+    order. Never-certified keys sort first (in registration order), so a
+    new key is certified before any old record is re-proven; the
+    certified tail runs OLDEST certification first (earliest green
+    round, then registration order), so the spare slots re-certify the
+    stalest records against the current tree first.
     """
     registry = load_all()
     rounds = _cert_rounds()
-    pri = {n: i for i, n in enumerate(_PRIORITY)}
-    uncert = [n for n in registry if n not in rounds]
-    uncert.sort(
-        key=lambda n: (0, pri[n], 0) if n in pri else (1, _family_rank(n), 0)
-    )
-    reg_idx = {n: i for i, n in enumerate(registry)}
-    cert = sorted(
-        (n for n in registry if n in rounds),
-        key=lambda n: (rounds[n], reg_idx[n]),
-    )
-    ordered = uncert + cert
+    # sorted() is stable: keys tied on their round keep registration order
+    ordered = sorted(registry, key=lambda n: rounds.get(n, -1))
     return {n: registry[n] for n in ordered}
 
 

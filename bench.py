@@ -11,13 +11,17 @@ Methodology:
   (~64 MB of input per partition, floored at 8 for parallelism, capped
   at 2x cores) — the same sizing rule a cluster deployment would apply
   per dataset; at sf0.1 (~25 MB total) that means 8 partitions instead
-  of drowning 10 MB of data in 64 tiny tasks. AQE stays on, as in
-  production.
+  of drowning 10 MB of data in 64 tiny tasks. AQE is switched OFF
+  below 1 GB of input (``SPARK_GRAFT_AQE=false``): at that size its
+  per-exchange re-planning has nothing to fix and costs a scheduler
+  round-trip per stage. Above 1 GB it stays on, as in production.
 - Warm-up runs the ENTIRE headline set once untimed before the timed
   pass: JVM JIT of join/agg/window codegen paths is worth ~2s on the
   first execution of each query shape, and steady-state plan time is
-  what the benchmark is defined to measure (parquet footers + schema
-  inference are also primed by the per-table count()).
+  what the benchmark is defined to measure. The per-table count() does
+  NOT prime schema inference: every ``spark.read.parquet`` without a
+  schema still runs its own footer-reading job, inside each builder,
+  in the timed pass too.
 """
 
 from __future__ import annotations

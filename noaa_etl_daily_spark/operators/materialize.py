@@ -47,7 +47,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-#: Plan-evidence knob: disable every non-required pin so tools_plans_*
+#: Plan-evidence knob: disable every non-required pin so tools_plans.py
 #: can dump untruncated trees. Debug only.
 _NO_CKPT_ENV = "SPARK_GRAFT_NO_CKPT"
 

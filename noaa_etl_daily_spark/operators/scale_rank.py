@@ -1,5 +1,5 @@
-"""Exact distributed ranking — the scale-safe twin family for the five
-global-window analytics queries VERDICT r4 marked ``weak``.
+"""Exact distributed ranking: global rank, ntile and running sums
+without a single-partition window.
 
 An unpartitioned ``Window.orderBy(...)`` over corpus-cardinality rows is
 the classic 100×-scale killer: Spark funnels EVERY row through one task
@@ -33,10 +33,12 @@ partition (correctness is unaffected; every retry is deterministic).
 On a long-lived 1000-executor run, swap it for ``checkpoint()`` against
 reliable storage — one line, same partition-id pinning guarantee.
 
-Every ``*_atscale`` twin below is EXACT — it registers with the
-original query's own oracle SQL, so the driver's hash gate proves twin
-≡ original (stronger than the label-agreement property test the
-round-4 verdict asked for).
+The five ranked analytics at the bottom of this module (RFM quintiles,
+Lorenz deciles, eval win-rate quartiles, the two-sample KS statistic,
+token-budget selection) have this as their only implementation. Each
+builder registers under two keys, its own name and the older
+``<name>_atscale`` alias, against ONE DuckDB oracle SQL string, so the
+oracle hash check holds both keys to the same exact reference.
 """
 
 from __future__ import annotations
@@ -45,12 +47,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import REGISTRY, register
+from ..registry import register
 from ..tables import load
 from .materialize import pin
-
-# the originals (and their oracle SQL strings) must be registered first
-from . import analytics  # noqa: F401  (import order, not a name use)
 
 
 def _range_parted(df: DataFrame, order_cols: list[Column]) -> DataFrame:
@@ -235,17 +234,63 @@ def with_cumsum(
     )
 
 
+_AGG_RFM_SEGMENTATION_ORACLE = """
+    WITH rfm AS (
+        SELECT o_custkey,
+               max(o_orderdate) AS last_order,
+               CAST(count(*) AS BIGINT) AS frequency,
+               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+                   AS monetary_cents
+        FROM orders
+        GROUP BY o_custkey
+    ),
+    scored AS (
+        SELECT o_custkey, last_order, frequency, monetary_cents,
+               ntile(5) OVER (ORDER BY last_order, o_custkey) AS r_score,
+               ntile(5) OVER (ORDER BY frequency, o_custkey) AS f_score,
+               ntile(5) OVER (ORDER BY monetary_cents, o_custkey) AS m_score
+        FROM rfm
+    ),
+    labeled AS (
+        SELECT *,
+               CASE
+                   WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4
+                       THEN 'champion'
+                   WHEN r_score >= 4 AND f_score >= 3 THEN 'loyal'
+                   WHEN r_score <= 2 AND f_score >= 4 THEN 'at_risk'
+                   WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
+                   ELSE 'regular'
+               END AS segment
+        FROM scored
+    )
+    SELECT segment,
+           CAST(count(*) AS BIGINT) AS n_customers,
+           CAST(sum(monetary_cents) AS BIGINT) AS total_cents,
+           round(avg(frequency), 6) AS avg_frequency
+    FROM labeled
+    GROUP BY segment
+    ORDER BY segment
+    """
+
+
 @register(
     "agg_rfm_segmentation_atscale",
-    oracle=REGISTRY["agg_rfm_segmentation"].oracle,
+    oracle=_AGG_RFM_SEGMENTATION_ORACLE,
 )
-def agg_rfm_segmentation_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation with SCALE-SAFE quintiles: bit-identical to
-    agg_rfm_segmentation (same oracle SQL — the driver's hash gate
-    proves it), but each ntile(5) runs as a distributed range-rank
-    instead of a single-partition global window, so the plan survives a
-    customer table 1000× this size. See module docstring for the rank
-    construction."""
+@register(
+    "agg_rfm_segmentation",
+    oracle=_AGG_RFM_SEGMENTATION_ORACLE,
+)
+def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM customer segmentation: recency / frequency / monetary
+    quintiles (ntile with deterministic custkey tiebreak) mapped to
+    the classic champion / loyal / at-risk / hibernating labels — the
+    marketing-analytics workhorse. The census output is 5 segment rows.
+
+    Scale design: orders reduce to customer grain first (integer cents,
+    one shuffle); each ntile(5) is a distributed range-rank
+    (``with_ntile``), so no stage funnels customer rows through one
+    task."""
     orders = load(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
@@ -297,15 +342,50 @@ def agg_rfm_segmentation_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_AGG_LORENZ_CURVE_ORACLE = """
+    WITH cust_rev AS (
+        SELECT o_custkey,
+               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+                   AS rev
+        FROM orders GROUP BY o_custkey
+    ),
+    ranked AS (
+        SELECT rev,
+               ntile(10) OVER (ORDER BY rev, o_custkey) AS decile
+        FROM cust_rev
+    ),
+    tot AS (SELECT CAST(sum(rev) AS BIGINT) AS t,
+                   CAST(count(*) AS BIGINT) AS n FROM cust_rev)
+    SELECT CAST(decile AS BIGINT) AS decile,
+           CAST(count(*) AS BIGINT) AS n_customers,
+           CAST(sum(rev) AS BIGINT) AS decile_cents,
+           round(CAST(sum(sum(rev)) OVER (ORDER BY decile
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                 AS DOUBLE) / max(t.t), 6) AS cum_revenue_share
+    FROM ranked CROSS JOIN tot t
+    GROUP BY decile
+    ORDER BY decile
+    """
+
+
 @register(
     "agg_lorenz_curve_atscale",
-    oracle=REGISTRY["agg_lorenz_curve"].oracle,
+    oracle=_AGG_LORENZ_CURVE_ORACLE,
 )
-def agg_lorenz_curve_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lorenz deciles with the decile assignment as a distributed
-    range-rank ntile(10) instead of a customer-cardinality global
-    window — bit-identical to agg_lorenz_curve (same oracle). The
-    cumulative share still runs over exactly 10 decile rows."""
+@register(
+    "agg_lorenz_curve",
+    oracle=_AGG_LORENZ_CURVE_ORACLE,
+)
+def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lorenz curve deciles: cumulative revenue share at each customer
+    decile (poorest→richest) — the curve whose area complement IS the
+    Gini (agg_gini_concentration reports the scalar; this reports the
+    curve dashboards actually draw).
+
+    Scale design: customer-grain reduction, then the decile assignment
+    is a distributed range-rank ntile(10) (deterministic custkey
+    tiebreak); the cumulative share runs over exactly 10 decile rows.
+    Integer cents end to end; one quantized division per decile row."""
     orders = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     cust_rev = orders.groupBy("o_custkey").agg(F.sum(cents).alias("rev"))
@@ -344,15 +424,60 @@ def agg_lorenz_curve_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_LLM_EVAL_WINRATE_ORACLE = """
+    WITH scored AS (
+        SELECT doc_id,
+               -- model A: lexical diversity; model B: char-per-token
+               -- efficiency — two orthogonal quality scorers
+               CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
+                   * 1000000 // len(string_split(text, ' ')) AS score_a,
+               CAST(n_chars AS BIGINT) * 1000000
+                   // len(string_split(text, ' ')) AS score_b,
+               ntile(4) OVER (ORDER BY n_chars, doc_id) AS length_quartile
+        FROM documents
+    ),
+    verdicts AS (
+        SELECT length_quartile,
+               CASE WHEN score_a > score_b THEN 'a_wins'
+                    WHEN score_b > score_a THEN 'b_wins'
+                    ELSE 'tie' END AS verdict
+        FROM scored
+    )
+    SELECT CAST(length_quartile AS BIGINT) AS length_quartile,
+           CAST(sum(CASE WHEN verdict = 'a_wins' THEN 1 ELSE 0 END)
+                AS BIGINT) AS a_wins,
+           CAST(sum(CASE WHEN verdict = 'b_wins' THEN 1 ELSE 0 END)
+                AS BIGINT) AS b_wins,
+           CAST(sum(CASE WHEN verdict = 'tie' THEN 1 ELSE 0 END) AS BIGINT)
+               AS ties,
+           round((sum(CASE WHEN verdict = 'a_wins' THEN 1.0 ELSE 0 END)
+                  - sum(CASE WHEN verdict = 'b_wins' THEN 1.0 ELSE 0 END))
+                 / sqrt(sum(CASE WHEN verdict != 'tie' THEN 1.0 ELSE 0
+                            END)), 6) AS sign_test_z
+    FROM verdicts
+    GROUP BY length_quartile
+    ORDER BY length_quartile
+    """
+
+
 @register(
     "llm_eval_winrate_atscale",
-    oracle=REGISTRY["llm_eval_winrate"].oracle,
+    oracle=_LLM_EVAL_WINRATE_ORACLE,
 )
-def llm_eval_winrate_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Win-rate eval with the length-quartile slice as a distributed
-    range-rank ntile(4) over doc rows — bit-identical to
-    llm_eval_winrate (same oracle), minus its doc-cardinality
-    single-partition window."""
+@register(
+    "llm_eval_winrate",
+    oracle=_LLM_EVAL_WINRATE_ORACLE,
+)
+def llm_eval_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise win-rate evaluation between two scorers with a sign-test
+    z per length quartile — the A-vs-B eval harness readout (win/tie/
+    loss census + 'is the preference significant' in one table),
+    sliced by a confounder the way a real eval report must be.
+
+    Scale design: both scorers are scan-stage integer-ppm expressions;
+    the quartile slice is a distributed range-rank ntile(4) over doc
+    rows; the verdict census is a 4-row aggregate with the z statistic
+    derived from exact integer win counts per output row."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     score_a = F.expr(
         "size(array_distinct(split(text, ' '))) * 1000000L "
@@ -399,17 +524,74 @@ def llm_eval_winrate_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_AGG_KS_TWO_SAMPLE_ORACLE = """
+    WITH samples AS (
+        SELECT CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
+                    THEN 1 ELSE 2 END AS grp,
+               CAST(round(value * 1000000) AS BIGINT) AS v
+        FROM events
+    ),
+    sizes AS (
+        SELECT CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n1,
+               CAST(sum(CASE WHEN grp = 2 THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n2
+        FROM samples
+    ),
+    cdf AS (
+        SELECT v,
+               CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) OVER (
+                   ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND CURRENT ROW) AS BIGINT) AS c1,
+               CAST(sum(CASE WHEN grp = 2 THEN 1 ELSE 0 END) OVER (
+                   ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND CURRENT ROW) AS BIGINT) AS c2,
+               row_number() OVER (ORDER BY v) AS rn,
+               CAST(count(*) OVER () AS BIGINT) AS n_tot
+        FROM samples
+    ),
+    stepped AS (
+        SELECT v, c1, c2, rn, n_tot,
+               lead(v) OVER (ORDER BY rn) AS next_v
+        FROM cdf
+    ),
+    steps AS (
+        -- evaluate the CDF gap only at the LAST row of each tied value
+        SELECT v, c1, c2
+        FROM stepped
+        WHERE rn = n_tot OR v != next_v
+    )
+    SELECT s.n1, s.n2,
+           CAST(max(abs(c1 * s.n2 - c2 * s.n1)) AS BIGINT)
+               AS d_scaled,
+           round(CAST(max(abs(c1 * s.n2 - c2 * s.n1)) AS DOUBLE)
+                 / (CAST(s.n1 AS DOUBLE) * s.n2), 6) AS ks_d
+    FROM steps CROSS JOIN sizes s
+    GROUP BY s.n1, s.n2
+    """
+
+
 @register(
     "agg_ks_two_sample_atscale",
-    oracle=REGISTRY["agg_ks_two_sample"].oracle,
+    oracle=_AGG_KS_TWO_SAMPLE_ORACLE,
 )
-def agg_ks_two_sample_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact KS statistic without the global CDF sort-window:
-    bit-identical to agg_ks_two_sample (same oracle). Ties collapse
-    FIRST (groupBy value — one keyed shuffle to value grain, which also
-    makes the tie-handling lead() dance unnecessary: each distinct
-    value IS one CDF step), then both groups' CDFs are distributed
-    prefix-sums over the value-grain rows. D stays in integer space."""
+@register(
+    "agg_ks_two_sample",
+    oracle=_AGG_KS_TWO_SAMPLE_ORACLE,
+)
+def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact two-sample Kolmogorov-Smirnov statistic between the month
+    halves' value distributions — the continuous-distribution drift test
+    beside evt_distribution_drift_jsd's categorical one. D is computed
+    in INTEGER space: max |c₁·n₂ − c₂·n₁| over CDF steps, divided once
+    at the end — no float ever enters the argmax, so the statistic is
+    engine-exact.
+
+    Scale design: ties collapse FIRST (groupBy value — one keyed
+    shuffle to value grain; each distinct value IS one CDF step, which
+    is where the KS definition evaluates tied values), then both
+    groups' CDFs are distributed prefix-sums (``with_cumsum``) over the
+    value-grain rows."""
     ev = load(spark, sf_dir, "events").select("ts", "value")
     grp = F.when(
         F.col("ts") < F.lit("2024-01-16 00:00:00").cast("timestamp_ntz"), 1
@@ -455,17 +637,52 @@ def agg_ks_two_sample_atscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_LLM_TOKEN_BUDGET_SELECTION_ORACLE = """
+    WITH scored AS (
+        SELECT doc_id, lang,
+               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+               CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
+                   * 1000000 // len(string_split(text, ' ')) AS quality_ppm
+        FROM documents
+    ),
+    ranked AS (
+        SELECT doc_id, lang, n_tokens, quality_ppm,
+               CAST(sum(n_tokens) OVER (
+                   ORDER BY quality_ppm DESC, doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS BIGINT) AS cum_tokens
+        FROM scored
+    )
+    SELECT lang,
+           CAST(count(*) AS BIGINT) AS n_docs_selected,
+           CAST(sum(n_tokens) AS BIGINT) AS tokens_selected,
+           CAST(min(quality_ppm) AS BIGINT) AS min_quality_ppm
+    FROM ranked
+    WHERE cum_tokens <= 10000
+    GROUP BY lang
+    ORDER BY lang
+    """
+
+
 @register(
     "llm_token_budget_selection_atscale",
-    oracle=REGISTRY["llm_token_budget_selection"].oracle,
+    oracle=_LLM_TOKEN_BUDGET_SELECTION_ORACLE,
 )
-def llm_token_budget_selection_atscale(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Token-budget curation without the doc-cardinality admission
-    window — bit-identical to llm_token_budget_selection (same
-    oracle). The greedy (quality desc, doc_id) admission decomposes
-    exactly:
+@register(
+    "llm_token_budget_selection",
+    oracle=_LLM_TOKEN_BUDGET_SELECTION_ORACLE,
+)
+def llm_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy corpus selection under a token budget: rank documents by a
+    quality score (lexical diversity, integer ppm), admit in rank order
+    until the running token total crosses the budget — the
+    budget-constrained curation step between scoring and training.
+    Quality is integer ppm (// floor division both engines), so
+    ordering and the budget crossover are engine-exact; ties break on
+    doc_id.
+
+    Scale design: the greedy (quality desc, doc_id) admission
+    decomposes exactly, with no doc-cardinality global window:
 
     1. token totals reduce to QUALITY-LEVEL grain (quality is integer
        ppm → at most 1e6+1 levels, a corpus-independent bound),
@@ -477,8 +694,8 @@ def llm_token_budget_selection_atscale(
        global, and only boundary-level rows reach it.
 
     A doc is admitted iff tokens-above-its-level + its within-level
-    doc_id-ordered running total ≤ budget — exactly the original's
-    cum_tokens ≤ budget rule."""
+    doc_id-ordered running total ≤ budget — exactly the oracle's
+    global ``cum_tokens ≤ budget`` rule."""
     budget = 10000
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     toks = F.split(F.col("text"), " ")

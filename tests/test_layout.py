@@ -193,10 +193,9 @@ def test_lateness_accounting_window_is_partitioned(spark, sf_dir):
 
 def test_entry_surfaces_uncertified_queries_first():
     """The driver samples ~50 queries per round in queries() iteration
-    order, so __spark_entry__ orders never-certified keys first (the
-    SURVEY §2 priority head leading). Locks that contract: every key
-    that already has a CORRECTNESS row from a prior round must sort
-    after every key that has none."""
+    order, so __spark_entry__ orders never-certified keys first. Locks
+    that contract: every key that already has a CORRECTNESS row from a
+    prior round must sort after every key that has none."""
     import __spark_entry__ as e
 
     q = list(e.queries())
@@ -205,9 +204,6 @@ def test_entry_surfaces_uncertified_queries_first():
     uncert = [n for n in q if n not in certified]
     # all uncertified keys come first, as one contiguous prefix
     assert q[: len(uncert)] == uncert
-    # the SURVEY §2 never-certified inventory keys lead the prefix
-    prio_live = [n for n in e._PRIORITY if n not in certified]
-    assert q[: len(prio_live)] == prio_live
 
 
 def test_static_partition_pruning_reaches_scan(spark, sf_dir):
@@ -306,17 +302,17 @@ def test_registry_wide_plan_lint(spark, sf_dir):
         "llm_interpolated_lm_ppl",    # 1-row unigram-total scalar
         "evt_survival_km",            # >=t join over the <=30-row
                                       # lifetime table (calendar-bounded)
-        "agg_ks_two_sample",          # 1-row sizes scalar
         "evt_max_drawdown",           # 1-row worst-drawdown scalar
-        "agg_lorenz_curve",           # 1-row revenue-total scalar
         "agg_population_stability_index",  # 1-row decile-edge + totals
                                            # scalars
         "agg_psi_kll_edges",          # same 1-row edge/total scalars
                                       # (edges from the KLL sketch)
         "graph_triangle_census",      # 1-row n_edges × 1-row n_triangles
                                       # scalar assembly
-        "agg_ks_two_sample_atscale",  # 1-row sizes scalar (as original)
-        "agg_lorenz_curve_atscale",   # 1-row revenue-total scalar
+        "agg_ks_two_sample",          # 1-row sizes scalar
+        "agg_ks_two_sample_atscale",  # same builder as agg_ks_two_sample
+        "agg_lorenz_curve",           # 1-row revenue-total scalar
+        "agg_lorenz_curve_atscale",   # same builder as agg_lorenz_curve
         "pipeline_important_stock",   # 1-row Q11 supply-total scalar
         "llm_semdedup_cells",         # K-row centroid codebook broadcast
                                       # (same bound as llm_sim_ivf_topk)
@@ -399,9 +395,6 @@ def test_registry_wide_plan_lint(spark, sf_dir):
                                       # rows (sublinear in corpus)
         "agg_mutual_information",     # 1-row total reduce of the
                                       # types×24 joint matrix
-        "llm_token_budget_selection", # global admission cumsum over the
-                                      # (id, score, tokens) projection
-                                      # (documented histogram form at scale)
         "evt_cusum_changepoint",      # CUSUM window over DAY rows
         "agg_ab_srm_check",           # 1-row total reduce of 2 arm rows
         "llm_topic_keywords_chi2",    # 1-row total reduce of the count matrix
@@ -424,20 +417,15 @@ def test_registry_wide_plan_lint(spark, sf_dir):
         "pipeline_incremental_curation", # same K-row codebook fold
         "llm_interpolated_lm_ppl",    # 1-row unigram-total reduce
         "evt_survival_km",            # KM window over <=30 risk rows
-        "agg_ks_two_sample",          # global CDF sort (the honest exact-KS
-                                      # cost; sketched form documented)
         "llm_annotation_kappa",       # 1-row confusion-matrix reduce
         "llm_prefix_cache_analysis",  # 1-row census over prefix groups
         "agg_population_stability_index",  # 1-row edge/total reduces
         "agg_psi_kll_edges",          # 1-row sketch-merge + total reduces
-        "llm_eval_winrate",           # quartile ntile over DOC rows
         "llm_zipf_exponent_fit",      # rank window over VOCAB rows +
                                       # 1-row regression reduce
-        "agg_lorenz_curve",           # decile windows over CUSTOMER rows
         "evt_max_drawdown",           # running windows over DAY rows
         "evt_forecast_backtest",      # lag windows over DAY rows + 1-row
                                       # score census
-        "agg_rfm_segmentation",       # ntile windows over CUSTOMER rows
         "llm_embedding_drift_check",  # 1-row reduce of 64 dim rows
         "graph_triangle_census",      # 1-row count over the C(25,2)-bounded
                                       # edge list
@@ -479,14 +467,20 @@ def test_registry_wide_plan_lint(spark, sf_dir):
         "agg_gumbel_block_maxima",    # 1-row moment reduce of MONTH rows
         "agg_cramers_v",              # 1-row reduce of the types×7 cell
                                       # matrix
-        # scale_rank *_atscale twins + with_cumsum consumers: their only
-        # single-partition stages are the P-row partition-offset window
-        # (P = shuffle-partitions conf, corpus-independent) and 1-row
-        # total reduces
+        # scale_rank consumers (the five ranked analytics, each under
+        # its own key and its *_atscale alias) + with_cumsum consumers:
+        # their only single-partition stages are the P-row
+        # partition-offset window (P = shuffle-partitions conf,
+        # corpus-independent) and 1-row total reduces
+        "agg_rfm_segmentation",
         "agg_rfm_segmentation_atscale",
+        "agg_lorenz_curve",
         "agg_lorenz_curve_atscale",
+        "llm_eval_winrate",
         "llm_eval_winrate_atscale",
+        "agg_ks_two_sample",
         "agg_ks_two_sample_atscale",
+        "llm_token_budget_selection",
         "llm_token_budget_selection_atscale",
         "llm_pack_token_shards",
         "pipeline_token_budget_curriculum",  # P-row offsets windows
@@ -508,28 +502,23 @@ def test_registry_wide_plan_lint(spark, sf_dir):
     # Unpartitioned-WINDOW whitelist (VERDICT r4 task 3): a logical
     # Window with an EMPTY partition spec funnels its whole input
     # through one task. Allowed ONLY over provably bounded inputs —
-    # each entry names the bound. Queries marked "exact-oracle twin"
-    # keep their global window BECAUSE they serve as the bit-identical
-    # small-scale oracle of a *_atscale rewrite in
-    # operators/scale_rank.py; any NEW corpus-grain global window must
-    # either use scale_rank helpers or justify itself here.
+    # each entry names the bound. Any NEW corpus-grain global window
+    # must either use operators/scale_rank.py helpers or justify itself
+    # here.
     UNPART_WINDOW_OK = {
-        "agg_ks_two_sample",          # corpus-grain CDF sort — exact-oracle
-                                      # twin of agg_ks_two_sample_atscale
-        "agg_rfm_segmentation",       # customer-grain ntiles — twin of
-                                      # agg_rfm_segmentation_atscale
-        "agg_lorenz_curve",           # customer-grain ntile — twin of
-                                      # agg_lorenz_curve_atscale
-        "llm_eval_winrate",           # doc-grain ntile — twin of
-                                      # llm_eval_winrate_atscale
-        "llm_token_budget_selection", # doc-grain admission cumsum — twin
-                                      # of llm_token_budget_selection_atscale
         # scale_rank consumers: offsets window over ≤P partition-count
-        # rows (P = shuffle-partitions conf) + bounded result windows
+        # rows (P = shuffle-partitions conf) + bounded result windows;
+        # the five ranked analytics appear under their own key and
+        # their *_atscale alias (one builder)
+        "agg_ks_two_sample",
         "agg_ks_two_sample_atscale",
+        "agg_rfm_segmentation",
         "agg_rfm_segmentation_atscale",
+        "agg_lorenz_curve",           # + 10 decile rows
         "agg_lorenz_curve_atscale",   # + 10 decile rows
+        "llm_eval_winrate",
         "llm_eval_winrate_atscale",
+        "llm_token_budget_selection",
         "llm_token_budget_selection_atscale",
         "llm_pack_token_shards",      # distributed prefix sum (P-row offsets)
         "pipeline_token_budget_curriculum",  # same P-row offsets windows

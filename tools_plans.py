@@ -1,8 +1,9 @@
-"""Dump explain("formatted") for the headline queries to plans/r12/.
+"""Dump explain("formatted") for the headline queries to plans/<round>/.
 
-Usage: python tools_plans_r12.py before|after [query ...]
+Usage: python tools_plans.py <round> before|after [query ...]
 
-Writes plans/r12/<query>_<tag>.txt with the formatted physical plan as
+<round> names the plan directory (e.g. r13). Writes
+plans/<round>/<query>_<tag>.txt with the formatted physical plan as
 produced under the bench session configuration (same conf path bench.py
 uses: AQE off below 1 GB input, shuffle partitions sized to input), so
 the committed plans match what the bench actually executes.
@@ -21,10 +22,12 @@ from noaa_etl_daily_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit("usage: python tools_plans.py <round> before|after [query ...]")
+    rnd, tag = sys.argv[1], sys.argv[2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = load_all()
-    names = sys.argv[2:] or [n for n in DEFAULT_HEADLINE if n in registry]
+    names = sys.argv[3:] or [n for n in DEFAULT_HEADLINE if n in registry]
 
     if input_bytes(sf_dir) < (1 << 30):
         os.environ["SPARK_GRAFT_AQE"] = "false"
@@ -34,7 +37,7 @@ def main() -> None:
         "spark.sql.shuffle.partitions", str(sized_shuffle_partitions(sf_dir))
     )
 
-    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r12")
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
