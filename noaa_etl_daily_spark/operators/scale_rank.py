@@ -1,10 +1,9 @@
-"""Exact distributed ranking: global rank, ntile and running sums
-without a single-partition window.
+"""Exact distributed ranking: rank, ntile and prefix-sum helpers that
+never funnel a corpus-grain input through one task.
 
-An unpartitioned ``Window.orderBy(...)`` over corpus-cardinality rows is
-the classic 100×-scale killer: Spark funnels EVERY row through one task
-(``Exchange SinglePartition``). The exact fix — used by every terasort-
-style engine — is range ranking:
+An unpartitioned ``Window.orderBy(...)`` over corpus-cardinality rows
+runs EVERY row through one task (``Exchange SinglePartition``). The
+exact fix — used by every terasort-style engine — is range ranking:
 
 1. ``repartitionByRange`` on the order key (one shuffle; each of the P
    partitions holds a contiguous key range),
@@ -33,22 +32,20 @@ partition (correctness is unaffected; every retry is deterministic).
 On a long-lived 1000-executor run, swap it for ``checkpoint()`` against
 reliable storage — one line, same partition-id pinning guarantee.
 
-The five ranked analytics at the bottom of this module (RFM quintiles,
-Lorenz deciles, eval win-rate quartiles, the two-sample KS statistic,
-token-budget selection) have this as their only implementation. Each
-builder registers under two keys, its own name and the older
-``<name>_atscale`` alias, against ONE DuckDB oracle SQL string, so the
-oracle hash check holds both keys to the same exact reference.
+The fixed cost (the pin, the offsets reduce and its broadcast join)
+does not grow with the corpus, but it is not small: at sf0.01 and sf0.1
+a global window over the same rows runs 1.6-4.5x faster (PLANS.md).
+That is why the five ranked analytics in ``analytics.py`` (RFM, Lorenz,
+eval win-rate, KS, token budget) keep their global window until a
+fixture shows the one-task sort to be the bottleneck.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import register
-from ..tables import load
 from .materialize import pin
 
 
@@ -231,522 +228,4 @@ def with_cumsum(
         )
     return out.drop(
         "__pid", *[f"__off_{c}" for c in sum_cols]
-    )
-
-
-_AGG_RFM_SEGMENTATION_ORACLE = """
-    WITH rfm AS (
-        SELECT o_custkey,
-               max(o_orderdate) AS last_order,
-               CAST(count(*) AS BIGINT) AS frequency,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                   AS monetary_cents
-        FROM orders
-        GROUP BY o_custkey
-    ),
-    scored AS (
-        SELECT o_custkey, last_order, frequency, monetary_cents,
-               ntile(5) OVER (ORDER BY last_order, o_custkey) AS r_score,
-               ntile(5) OVER (ORDER BY frequency, o_custkey) AS f_score,
-               ntile(5) OVER (ORDER BY monetary_cents, o_custkey) AS m_score
-        FROM rfm
-    ),
-    labeled AS (
-        SELECT *,
-               CASE
-                   WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4
-                       THEN 'champion'
-                   WHEN r_score >= 4 AND f_score >= 3 THEN 'loyal'
-                   WHEN r_score <= 2 AND f_score >= 4 THEN 'at_risk'
-                   WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
-                   ELSE 'regular'
-               END AS segment
-        FROM scored
-    )
-    SELECT segment,
-           CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(sum(monetary_cents) AS BIGINT) AS total_cents,
-           round(avg(frequency), 6) AS avg_frequency
-    FROM labeled
-    GROUP BY segment
-    ORDER BY segment
-    """
-
-
-@register(
-    "agg_rfm_segmentation_atscale",
-    oracle=_AGG_RFM_SEGMENTATION_ORACLE,
-)
-@register(
-    "agg_rfm_segmentation",
-    oracle=_AGG_RFM_SEGMENTATION_ORACLE,
-)
-def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation: recency / frequency / monetary
-    quintiles (ntile with deterministic custkey tiebreak) mapped to
-    the classic champion / loyal / at-risk / hibernating labels — the
-    marketing-analytics workhorse. The census output is 5 segment rows.
-
-    Scale design: orders reduce to customer grain first (integer cents,
-    one shuffle); each ntile(5) is a distributed range-rank
-    (``with_ntile``), so no stage funnels customer rows through one
-    task."""
-    orders = load(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    rfm = orders.groupBy("o_custkey").agg(
-        F.max("o_orderdate").alias("last_order"),
-        F.count(F.lit(1)).alias("frequency"),
-        F.sum(cents).alias("monetary_cents"),
-    )
-    scored = with_ntile(
-        with_ntile(
-            with_ntile(
-                rfm,
-                [F.col("last_order").asc(), F.col("o_custkey").asc()],
-                5,
-                "r_score",
-            ),
-            [F.col("frequency").asc(), F.col("o_custkey").asc()],
-            5,
-            "f_score",
-        ),
-        [F.col("monetary_cents").asc(), F.col("o_custkey").asc()],
-        5,
-        "m_score",
-    )
-    segment = (
-        F.when(
-            (F.col("r_score") >= 4)
-            & (F.col("f_score") >= 4)
-            & (F.col("m_score") >= 4),
-            "champion",
-        )
-        .when((F.col("r_score") >= 4) & (F.col("f_score") >= 3), "loyal")
-        .when((F.col("r_score") <= 2) & (F.col("f_score") >= 4), "at_risk")
-        .when(
-            (F.col("r_score") <= 2) & (F.col("f_score") <= 2), "hibernating"
-        )
-        .otherwise("regular")
-    )
-    return (
-        scored.withColumn("segment", segment)
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum("monetary_cents").alias("total_cents"),
-            F.round(F.avg("frequency"), 6).alias("avg_frequency"),
-        )
-        .orderBy("segment")
-    )
-
-
-_AGG_LORENZ_CURVE_ORACLE = """
-    WITH cust_rev AS (
-        SELECT o_custkey,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                   AS rev
-        FROM orders GROUP BY o_custkey
-    ),
-    ranked AS (
-        SELECT rev,
-               ntile(10) OVER (ORDER BY rev, o_custkey) AS decile
-        FROM cust_rev
-    ),
-    tot AS (SELECT CAST(sum(rev) AS BIGINT) AS t,
-                   CAST(count(*) AS BIGINT) AS n FROM cust_rev)
-    SELECT CAST(decile AS BIGINT) AS decile,
-           CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(sum(rev) AS BIGINT) AS decile_cents,
-           round(CAST(sum(sum(rev)) OVER (ORDER BY decile
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS DOUBLE) / max(t.t), 6) AS cum_revenue_share
-    FROM ranked CROSS JOIN tot t
-    GROUP BY decile
-    ORDER BY decile
-    """
-
-
-@register(
-    "agg_lorenz_curve_atscale",
-    oracle=_AGG_LORENZ_CURVE_ORACLE,
-)
-@register(
-    "agg_lorenz_curve",
-    oracle=_AGG_LORENZ_CURVE_ORACLE,
-)
-def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lorenz curve deciles: cumulative revenue share at each customer
-    decile (poorest→richest) — the curve whose area complement IS the
-    Gini (agg_gini_concentration reports the scalar; this reports the
-    curve dashboards actually draw).
-
-    Scale design: customer-grain reduction, then the decile assignment
-    is a distributed range-rank ntile(10) (deterministic custkey
-    tiebreak); the cumulative share runs over exactly 10 decile rows.
-    Integer cents end to end; one quantized division per decile row."""
-    orders = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    cust_rev = orders.groupBy("o_custkey").agg(F.sum(cents).alias("rev"))
-    ranked = with_ntile(
-        cust_rev,
-        [F.col("rev").asc(), F.col("o_custkey").asc()],
-        10,
-        "decile",
-    )
-    tot = cust_rev.agg(F.sum("rev").alias("t"))
-    deciles = (
-        ranked.groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum("rev").alias("decile_cents"),
-        )
-        .crossJoin(F.broadcast(tot))
-    )
-    w = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        deciles.withColumn(
-            "cum_revenue_share",
-            F.round(
-                F.sum("decile_cents").over(w).cast("double") / F.col("t"), 6
-            ),
-        )
-        .select(
-            F.col("decile").cast("bigint").alias("decile"),
-            "n_customers",
-            "decile_cents",
-            "cum_revenue_share",
-        )
-        .orderBy("decile")
-    )
-
-
-_LLM_EVAL_WINRATE_ORACLE = """
-    WITH scored AS (
-        SELECT doc_id,
-               -- model A: lexical diversity; model B: char-per-token
-               -- efficiency — two orthogonal quality scorers
-               CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-                   * 1000000 // len(string_split(text, ' ')) AS score_a,
-               CAST(n_chars AS BIGINT) * 1000000
-                   // len(string_split(text, ' ')) AS score_b,
-               ntile(4) OVER (ORDER BY n_chars, doc_id) AS length_quartile
-        FROM documents
-    ),
-    verdicts AS (
-        SELECT length_quartile,
-               CASE WHEN score_a > score_b THEN 'a_wins'
-                    WHEN score_b > score_a THEN 'b_wins'
-                    ELSE 'tie' END AS verdict
-        FROM scored
-    )
-    SELECT CAST(length_quartile AS BIGINT) AS length_quartile,
-           CAST(sum(CASE WHEN verdict = 'a_wins' THEN 1 ELSE 0 END)
-                AS BIGINT) AS a_wins,
-           CAST(sum(CASE WHEN verdict = 'b_wins' THEN 1 ELSE 0 END)
-                AS BIGINT) AS b_wins,
-           CAST(sum(CASE WHEN verdict = 'tie' THEN 1 ELSE 0 END) AS BIGINT)
-               AS ties,
-           round((sum(CASE WHEN verdict = 'a_wins' THEN 1.0 ELSE 0 END)
-                  - sum(CASE WHEN verdict = 'b_wins' THEN 1.0 ELSE 0 END))
-                 / sqrt(sum(CASE WHEN verdict != 'tie' THEN 1.0 ELSE 0
-                            END)), 6) AS sign_test_z
-    FROM verdicts
-    GROUP BY length_quartile
-    ORDER BY length_quartile
-    """
-
-
-@register(
-    "llm_eval_winrate_atscale",
-    oracle=_LLM_EVAL_WINRATE_ORACLE,
-)
-@register(
-    "llm_eval_winrate",
-    oracle=_LLM_EVAL_WINRATE_ORACLE,
-)
-def llm_eval_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise win-rate evaluation between two scorers with a sign-test
-    z per length quartile — the A-vs-B eval harness readout (win/tie/
-    loss census + 'is the preference significant' in one table),
-    sliced by a confounder the way a real eval report must be.
-
-    Scale design: both scorers are scan-stage integer-ppm expressions;
-    the quartile slice is a distributed range-rank ntile(4) over doc
-    rows; the verdict census is a 4-row aggregate with the z statistic
-    derived from exact integer win counts per output row."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
-    score_a = F.expr(
-        "size(array_distinct(split(text, ' '))) * 1000000L "
-        "div size(split(text, ' '))"
-    )
-    score_b = F.expr(
-        "cast(n_chars as bigint) * 1000000L div size(split(text, ' '))"
-    )
-    sliced = with_ntile(
-        docs,
-        [F.col("n_chars").asc(), F.col("doc_id").asc()],
-        4,
-        "length_quartile",
-    )
-    scored = sliced.select(
-        score_a.alias("score_a"),
-        score_b.alias("score_b"),
-        "length_quartile",
-    )
-    verdict = (
-        F.when(F.col("score_a") > F.col("score_b"), "a_wins")
-        .when(F.col("score_b") > F.col("score_a"), "b_wins")
-        .otherwise("tie")
-    )
-    a_w = F.sum(F.when(F.col("verdict") == "a_wins", 1).otherwise(0))
-    b_w = F.sum(F.when(F.col("verdict") == "b_wins", 1).otherwise(0))
-    nt = F.sum(F.when(F.col("verdict") != "tie", 1.0).otherwise(0.0))
-    return (
-        scored.withColumn("verdict", verdict)
-        .groupBy(
-            F.col("length_quartile").cast("bigint").alias("length_quartile")
-        )
-        .agg(
-            a_w.alias("a_wins"),
-            b_w.alias("b_wins"),
-            F.sum(F.when(F.col("verdict") == "tie", 1).otherwise(0)).alias(
-                "ties"
-            ),
-            F.round(
-                (a_w.cast("double") - b_w.cast("double")) / F.sqrt(nt), 6
-            ).alias("sign_test_z"),
-        )
-        .orderBy("length_quartile")
-    )
-
-
-_AGG_KS_TWO_SAMPLE_ORACLE = """
-    WITH samples AS (
-        SELECT CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                    THEN 1 ELSE 2 END AS grp,
-               CAST(round(value * 1000000) AS BIGINT) AS v
-        FROM events
-    ),
-    sizes AS (
-        SELECT CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n1,
-               CAST(sum(CASE WHEN grp = 2 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n2
-        FROM samples
-    ),
-    cdf AS (
-        SELECT v,
-               CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) OVER (
-                   ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW) AS BIGINT) AS c1,
-               CAST(sum(CASE WHEN grp = 2 THEN 1 ELSE 0 END) OVER (
-                   ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW) AS BIGINT) AS c2,
-               row_number() OVER (ORDER BY v) AS rn,
-               CAST(count(*) OVER () AS BIGINT) AS n_tot
-        FROM samples
-    ),
-    stepped AS (
-        SELECT v, c1, c2, rn, n_tot,
-               lead(v) OVER (ORDER BY rn) AS next_v
-        FROM cdf
-    ),
-    steps AS (
-        -- evaluate the CDF gap only at the LAST row of each tied value
-        SELECT v, c1, c2
-        FROM stepped
-        WHERE rn = n_tot OR v != next_v
-    )
-    SELECT s.n1, s.n2,
-           CAST(max(abs(c1 * s.n2 - c2 * s.n1)) AS BIGINT)
-               AS d_scaled,
-           round(CAST(max(abs(c1 * s.n2 - c2 * s.n1)) AS DOUBLE)
-                 / (CAST(s.n1 AS DOUBLE) * s.n2), 6) AS ks_d
-    FROM steps CROSS JOIN sizes s
-    GROUP BY s.n1, s.n2
-    """
-
-
-@register(
-    "agg_ks_two_sample_atscale",
-    oracle=_AGG_KS_TWO_SAMPLE_ORACLE,
-)
-@register(
-    "agg_ks_two_sample",
-    oracle=_AGG_KS_TWO_SAMPLE_ORACLE,
-)
-def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample Kolmogorov-Smirnov statistic between the month
-    halves' value distributions — the continuous-distribution drift test
-    beside evt_distribution_drift_jsd's categorical one. D is computed
-    in INTEGER space: max |c₁·n₂ − c₂·n₁| over CDF steps, divided once
-    at the end — no float ever enters the argmax, so the statistic is
-    engine-exact.
-
-    Scale design: ties collapse FIRST (groupBy value — one keyed
-    shuffle to value grain; each distinct value IS one CDF step, which
-    is where the KS definition evaluates tied values), then both
-    groups' CDFs are distributed prefix-sums (``with_cumsum``) over the
-    value-grain rows."""
-    ev = load(spark, sf_dir, "events").select("ts", "value")
-    grp = F.when(
-        F.col("ts") < F.lit("2024-01-16 00:00:00").cast("timestamp_ntz"), 1
-    ).otherwise(2)
-    samples = ev.select(
-        grp.alias("grp"),
-        F.round(F.col("value") * 1000000).cast("bigint").alias("v"),
-    )
-    steps0 = samples.groupBy("v").agg(
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).alias("d1"),
-        F.sum(F.when(F.col("grp") == 2, 1).otherwise(0)).alias("d2"),
-    )
-    steps = with_cumsum(
-        steps0, [F.col("v").asc()], ["d1", "d2"], ["c1", "c2"]
-    )
-    sizes = steps0.agg(
-        F.sum("d1").cast("bigint").alias("n1"),
-        F.sum("d2").cast("bigint").alias("n2"),
-    )
-    return (
-        steps.crossJoin(F.broadcast(sizes))
-        .groupBy("n1", "n2")
-        .agg(
-            F.max(
-                F.abs(F.col("c1") * F.col("n2") - F.col("c2") * F.col("n1"))
-            ).alias("d_scaled"),
-            # try_divide: an empty month half zeroes n1*n2 — NULL D,
-            # matching DuckDB's x/0 → NULL (Spark ANSI throws, G18)
-            F.round(
-                F.try_divide(
-                    F.max(
-                        F.abs(
-                            F.col("c1") * F.col("n2")
-                            - F.col("c2") * F.col("n1")
-                        )
-                    ).cast("double"),
-                    F.col("n1").cast("double") * F.col("n2"),
-                ),
-                6,
-            ).alias("ks_d"),
-        )
-        .select("n1", "n2", "d_scaled", "ks_d")
-    )
-
-
-_LLM_TOKEN_BUDGET_SELECTION_ORACLE = """
-    WITH scored AS (
-        SELECT doc_id, lang,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT)
-                   * 1000000 // len(string_split(text, ' ')) AS quality_ppm
-        FROM documents
-    ),
-    ranked AS (
-        SELECT doc_id, lang, n_tokens, quality_ppm,
-               CAST(sum(n_tokens) OVER (
-                   ORDER BY quality_ppm DESC, doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS BIGINT) AS cum_tokens
-        FROM scored
-    )
-    SELECT lang,
-           CAST(count(*) AS BIGINT) AS n_docs_selected,
-           CAST(sum(n_tokens) AS BIGINT) AS tokens_selected,
-           CAST(min(quality_ppm) AS BIGINT) AS min_quality_ppm
-    FROM ranked
-    WHERE cum_tokens <= 10000
-    GROUP BY lang
-    ORDER BY lang
-    """
-
-
-@register(
-    "llm_token_budget_selection_atscale",
-    oracle=_LLM_TOKEN_BUDGET_SELECTION_ORACLE,
-)
-@register(
-    "llm_token_budget_selection",
-    oracle=_LLM_TOKEN_BUDGET_SELECTION_ORACLE,
-)
-def llm_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy corpus selection under a token budget: rank documents by a
-    quality score (lexical diversity, integer ppm), admit in rank order
-    until the running token total crosses the budget — the
-    budget-constrained curation step between scoring and training.
-    Quality is integer ppm (// floor division both engines), so
-    ordering and the budget crossover are engine-exact; ties break on
-    doc_id.
-
-    Scale design: the greedy (quality desc, doc_id) admission
-    decomposes exactly, with no doc-cardinality global window:
-
-    1. token totals reduce to QUALITY-LEVEL grain (quality is integer
-       ppm → at most 1e6+1 levels, a corpus-independent bound),
-    2. a distributed prefix-sum over levels (desc) finds each level's
-       tokens-strictly-above count; levels whose inclusive prefix fits
-       the budget admit ALL their docs,
-    3. at most ONE boundary level needs per-doc resolution — its docs'
-       running sum is a window PARTITIONED by the level key, never
-       global, and only boundary-level rows reach it.
-
-    A doc is admitted iff tokens-above-its-level + its within-level
-    doc_id-ordered running total ≤ budget — exactly the oracle's
-    global ``cum_tokens ≤ budget`` rule."""
-    budget = 10000
-    docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    toks = F.split(F.col("text"), " ")
-    scored = docs.select(
-        "doc_id",
-        "lang",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.expr(
-            "size(array_distinct(split(text, ' '))) * 1000000L "
-            "div size(split(text, ' '))"
-        ).alias("quality_ppm"),
-    )
-    levels = scored.groupBy("quality_ppm").agg(
-        F.sum("n_tokens").alias("lvl_tokens")
-    )
-    lvl = with_cumsum(
-        levels,
-        [F.col("quality_ppm").desc()],
-        ["lvl_tokens"],
-        ["cum_incl"],
-    ).withColumn("c_before", F.col("cum_incl") - F.col("lvl_tokens"))
-    full_in = scored.join(
-        F.broadcast(lvl.filter(F.col("cum_incl") <= budget)).select(
-            "quality_ppm"
-        ),
-        "quality_ppm",
-        "left_semi",
-    )
-    boundary = lvl.filter(
-        (F.col("c_before") <= budget) & (F.col("cum_incl") > budget)
-    ).select("quality_ppm", "c_before")
-    w_b = (
-        Window.partitionBy("quality_ppm")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    boundary_in = (
-        scored.join(F.broadcast(boundary), "quality_ppm")
-        .withColumn("__s", F.sum("n_tokens").over(w_b))
-        .filter(F.col("c_before") + F.col("__s") <= budget)
-        .select("quality_ppm", "doc_id", "lang", "n_tokens")
-    )
-    admitted = full_in.select(
-        "quality_ppm", "doc_id", "lang", "n_tokens"
-    ).unionByName(boundary_in)
-    return (
-        admitted.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs_selected"),
-            F.sum("n_tokens").alias("tokens_selected"),
-            F.min("quality_ppm").alias("min_quality_ppm"),
-        )
-        .orderBy("lang")
     )

@@ -171,9 +171,12 @@ def test_pin_size_gate_both_branches(spark, sf_dir, monkeypatch):
     assert "ExistingRDD" not in _final_plan(recomputed)
 
     # the join under the pins is unsorted: the two physical plans may
-    # emit the same rows in different orders
+    # emit the same rows in different orders; the values must match
+    # exactly
     pd.testing.assert_frame_equal(
-        canonicalize(pinned.toPandas()), canonicalize(recomputed.toPandas())
+        canonicalize(pinned.toPandas()),
+        canonicalize(recomputed.toPandas()),
+        check_exact=True,
     )
 
 
