@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import load
+from ..tables import file_fp, load, path_for
 from .materialize import input_size_bytes, pin
 
 Q3_CUTOFF = "1998-03-15 00:00:00"
@@ -142,21 +142,16 @@ def pipeline_regional_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the source file's actual bytes, and stays OFF for a corpus-scale
     # supplier (never force-broadcast a scaling table: at 100 TB this
     # join is AQE's runtime choice, exactly as before).
-    import os as _os
-
-    # ADVICE r10 hardening: (a) isfile, matching _src_fp's
-    # single-file-fixture contract — getsize on a directory-shaped
-    # fixture returns the tiny dir-inode size and would silently pass
-    # the gate for an arbitrarily large table, so a non-file shape
-    # disables the forced broadcast instead; (b) threshold 16 MB of
-    # on-disk parquet ≈ 64 MB in-memory at the ~4× snappy+encoding
-    # inflation the fixtures measure — conservative against the
-    # classic compressed-size-vs-memory broadcast OOM.
-    supplier_path = _os.path.join(sf_dir, "supplier.parquet")
-    if (
-        _os.path.isfile(supplier_path)
-        and _os.path.getsize(supplier_path) < (16 << 20)
-    ):
+    # ADVICE r10 hardening: (a) file_fp is None for a non-regular path,
+    # matching _src_fp's single-file-fixture contract — the size of a
+    # directory-shaped fixture is the tiny dir-inode size and would
+    # silently pass the gate for an arbitrarily large table, so a
+    # non-file shape disables the forced broadcast instead; (b)
+    # threshold 16 MB of on-disk parquet ≈ 64 MB in-memory at the ~4×
+    # snappy+encoding inflation the fixtures measure — conservative
+    # against the classic compressed-size-vs-memory broadcast OOM.
+    supplier_fp = file_fp(path_for(sf_dir, "supplier"))
+    if supplier_fp is not None and supplier_fp[0] < (16 << 20):
         supp = F.broadcast(supp)
     cust = (
         load(spark, sf_dir, "customer")

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import register
-from ..tables import load
+from ..tables import file_fp, load
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
@@ -41,11 +41,10 @@ def _scratch(*parts: str) -> str:
 
 
 def _src_fp(sf_dir: str, table: str, params: str = "") -> str:
-    """Content fingerprint of a fixture parquet: size + ns-resolution
-    mtime, plus an optional caller-supplied write-parameters token.
-    Nanosecond stat plus the size makes a same-second rewrite
-    (coarse-mtime filesystems) distinguishable, unlike raw getmtime
-    ordering. ``params`` folds the WRITE side into the key — two
+    """Content fingerprint of a fixture parquet: its
+    :func:`~noaa_etl_daily_spark.tables.file_fp` (size + ns-resolution
+    mtime), plus an optional caller-supplied write-parameters token.
+    ``params`` folds the WRITE side into the key — two
     preparers (or one preparer with different n_files) pointed at the
     same out_dir must not validate each other's layout. Fixtures are
     single parquet FILES by contract; a directory's size/mtime would
@@ -53,16 +52,14 @@ def _src_fp(sf_dir: str, table: str, params: str = "") -> str:
     non-regular path is an error here rather than a silent stale-cache
     hole."""
     path = os.path.join(sf_dir, f"{table}.parquet")
-    # isfile BEFORE stat: isfile is False for a missing path, so the
-    # diagnostic ValueError fires for both missing and non-regular
-    # fixtures instead of a bare FileNotFoundError pre-empting it
-    if not os.path.isfile(path):
+    fp = file_fp(path)
+    if fp is None:
         raise ValueError(
             f"fixture {path} is missing or not a regular file; directory "
             "fixtures need a per-data-file fingerprint, not a dir stat"
         )
-    st = os.stat(path)
-    return f"{st.st_size}:{st.st_mtime_ns}:{params}"
+    size, mtime_ns = fp
+    return f"{size}:{mtime_ns}:{params}"
 
 
 def _cached(out: str, sf_dir: str, table: str, params: str = "") -> bool:

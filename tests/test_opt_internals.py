@@ -14,11 +14,17 @@
   the checkpoint branch on small inputs, the recompute branch above the
   size gate (same rows either way), and a ``required=True`` pin must
   survive both the debug knob and the gate.
+- ``tables.load``'s schema cache: a repeated load of an unchanged
+  fixture file reads with the cached schema and fires no Spark job,
+  with the same schema and rows as an inferred read; a rewrite is
+  re-inferred; a directory-shaped table still loads.
 """
 
 from __future__ import annotations
 
+import os
 import struct
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -241,3 +247,109 @@ def test_pin_gate_arithmetic_and_unknown_inputs(spark, monkeypatch):
     # a table that cannot be sized reads as corpus-sized -> recompute
     assert input_size_bytes("/nonexistent", "documents") == _UNKNOWN_BYTES
     assert pin(df, approx_input_bytes=_UNKNOWN_BYTES) is df
+
+
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn fired), counted by job group."""
+    sc = spark.sparkContext
+    group = f"schema-cache-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return canonicalize(df.toPandas())
+
+
+def test_repeat_load_fires_no_job_and_matches_inferred_read(spark, sf_dir):
+    from noaa_etl_daily_spark.tables import TABLE_NAMES, load, path_for
+
+    for name in TABLE_NAMES:
+        path = path_for(sf_dir, name)
+        inferred, jobs = _count_jobs(spark, lambda: spark.read.parquet(path))
+        assert jobs >= 1, f"{name}: an inferred read must fire a footer job"
+        load(spark, sf_dir, name)
+        cached, jobs = _count_jobs(spark, lambda: load(spark, sf_dir, name))
+        assert jobs == 0, f"{name}: repeat load fired {jobs} job(s)"
+        assert cached.schema == inferred.schema, name
+        pd.testing.assert_frame_equal(
+            _rows(cached), _rows(inferred), check_exact=True
+        )
+
+
+def test_cached_nanos_events_read_matches_inferred(spark, tmp_path):
+    """An events file with ``ts`` as parquet TIMESTAMP(NANOS) takes
+    ``_load_events``' bigint branch from the cached schema too, and
+    floors ns to µs exactly like the inferred read (pre-epoch
+    included)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from noaa_etl_daily_spark.tables import _SCHEMAS, load, path_for
+
+    ns = [1_700_000_000_123_456_789, -1_500, 0, 86_400_000_000_999]
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = path_for(str(sf), "events")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(ns)), pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+        }),
+        path,
+    )
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+
+    first = load(spark, str(sf), "events")  # infers and stores
+    assert _SCHEMAS[os.path.abspath(path)][1]["ts"].dataType.typeName() == "long"
+    second, jobs = _count_jobs(spark, lambda: load(spark, str(sf), "events"))
+    assert jobs == 0
+    assert first.schema == second.schema
+    assert second.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    want = pd.DataFrame({
+        "event_id": np.arange(len(ns), dtype="int64"),
+        "ts": pd.to_datetime([n // 1000 for n in ns], unit="us").astype(
+            "datetime64[us]"
+        ),
+    })
+    for df in (first, second):
+        pd.testing.assert_frame_equal(_rows(df), canonicalize(want), check_exact=True)
+
+
+def test_rewritten_fixture_is_reinferred(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from noaa_etl_daily_spark.tables import load, path_for
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = path_for(str(sf), "region")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert load(spark, str(sf), "region").columns == ["r_regionkey"]
+    assert load(spark, str(sf), "region").columns == ["r_regionkey"]
+
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "ASIA"]}), path
+    )
+    got = load(spark, str(sf), "region")
+    assert got.columns == ["r_regionkey", "r_name"]
+    assert sorted(r.r_name for r in got.collect()) == ["AFRICA", "ASIA"]
+
+
+def test_directory_shaped_table_still_loads(spark, tmp_path):
+    from noaa_etl_daily_spark.tables import _SCHEMAS, load, path_for
+
+    sf = tmp_path / "sf"
+    path = path_for(str(sf), "nation")
+    spark.range(5).withColumnRenamed("id", "n_nationkey").repartition(2).write.parquet(path)
+    assert os.path.isdir(path)
+    for _ in range(2):
+        got = load(spark, str(sf), "nation")
+        assert sorted(r.n_nationkey for r in got.collect()) == list(range(5))
+    assert os.path.abspath(path) not in _SCHEMAS
