@@ -2350,154 +2350,116 @@ def pipeline_token_budget_curriculum(
     rank last (NULLS LAST both engines), never contribute to the sum,
     and the budget has always been exhausted before decile 10's tail.
 
-    Scale shape: NO corpus-grain global window anywhere — the global
+    Scale shape: NO corpus-grain global window anywhere. The global
     rank is scale_rank.with_global_rank's distributed form (range
-    shuffle + P-row broadcast offsets), the decile is ntile_bucket
-    arithmetic on (rank, n) — no second rank pass — the within-decile
-    position is rank minus the decile's ntile START (pure arithmetic on
-    (rank, n) — no per-decile aggregation pass), and all four epochs'
-    budget cuts come out of ONE distributed prefix-sum pass: the
-    running sum is decomposed per decile (10 conditional running sums
-    sharing a single (pos, decile)-ordered window over ONE range-parted
-    frame), and epoch e's cum is the sum of the decile-components
-    d ≤ max_decile(e) — so the fixed 4-epoch schedule is a per-row
-    array-explode over the SAME windowed frame instead of four
-    independent range-shuffle + checkpoint + window branches.
+    shuffle + P-row broadcast offsets); the decile is ntile_bucket
+    arithmetic on (rank, n), and the within-decile position is rank
+    minus the decile's ntile start — both pure arithmetic, no second
+    rank pass and no per-decile aggregate (_curriculum_interleave).
+    The interleave order (pos, decile) then has a closed form:
+    g = 10·(pos − 1) + decile is each row's 1-based position in it, a
+    dense index over [1, n]. All four epochs' budget cuts come from ONE
+    scale_rank.with_dense_cumsum pass keyed on g — one conditional
+    running sum per epoch, sum(n_tokens where decile ≤ max_decile(e)),
+    which is epoch e's cum on every row it admits — and the fixed
+    4-epoch schedule is a per-row array-explode over that frame.
 
-    Optimization r12 (guide §2.4 "remove shuffles outright"): the
-    previous form paid, PER EPOCH, a range shuffle + localCheckpoint of
-    the admitted subset, a __pid-offset aggregate pair, and a window
-    hash exchange — 14 visible exchanges and 5 checkpointed frames per
-    execution. This form pays the rank pass plus ONE extra range
-    shuffle + checkpoint and ONE window pass — 7 exchanges, 2
-    checkpoints — with bit-identical output (same oracle SQL; the
-    per-decile decomposition reproduces the oracle's running-sum NULL
-    semantics exactly: cum is NULL until the first non-NULL n_tokens
-    in the admitted global prefix, and an all-NULL prefix row is
-    dropped by the budget filter in both engines)."""
-    from pyspark.sql import Window
+    Optimization (known-index prefix sum): since g is known, bucketing
+    on it is arithmetic, so this key pays no second range shuffle, no
+    range-sampling build job and no partition-id pin after the rank
+    pass, and the post-rank arithmetic is SQL text (each Column node
+    is a py4j round trip). Output is bit-identical under the same
+    oracle SQL: each conditional sum is NULL iff every admitted value
+    in its prefix is NULL — the oracle's running-sum NULL semantics —
+    so an all-NULL prefix row is dropped by the budget filter in both
+    engines."""
+    from .scale_rank import with_dense_cumsum
 
-    from .scale_rank import _range_parted, ntile_bucket, with_global_rank
+    ix = _curriculum_interleave(load(spark, sf_dir, "documents"))
+    cum = with_dense_cumsum(
+        ix.selectExpr(
+            "*",
+            *[
+                f"CASE WHEN decile <= {maxd} THEN n_tokens END AS t{epoch}"
+                for epoch, maxd in _CURR_EPOCHS
+            ],
+        ),
+        "g",
+        "ntot",
+        [f"t{epoch}" for epoch, _ in _CURR_EPOCHS],
+        [f"c{epoch}" for epoch, _ in _CURR_EPOCHS],
+    )
+    entries = ", ".join(
+        f"named_struct('epoch', {epoch}, 'maxd', {maxd}, 'cum', c{epoch})"
+        for epoch, maxd in _CURR_EPOCHS
+    )
+    admitted = cum.selectExpr(
+        "decile",
+        "n_tokens",
+        "pos",
+        f"explode(filter(array({entries}), x -> decile <= x.maxd "
+        f"AND x.cum <= {_CURR_BUDGET})) AS e",
+    )
+    return (
+        admitted.groupBy(F.expr("e.epoch AS epoch"), F.expr("decile"))
+        .agg(
+            F.expr("count(1) AS n_docs"),
+            F.expr("sum(n_tokens) AS tokens_admitted"),
+            F.expr("max(pos) AS depth_reached"),
+        )
+        .sort(F.expr("epoch"), F.expr("decile"))
+    )
 
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    scored = docs.select(
+
+# SQL text over (rnk, ntot, decile): the within-decile position (rank
+# minus the decile's ntile start) and the interleave index
+_CURR_POS = "rnk - (decile - 1) * (ntot div 10) - least(decile - 1, ntot % 10)"
+_CURR_G = f"10 * ({_CURR_POS} - 1) + decile"
+
+
+def _curriculum_interleave(docs: DataFrame) -> DataFrame:
+    """The shared front half of both curriculum keys: documents scored
+    by quality, globally ranked (scale_rank.with_global_rank), cut into
+    ntile(10) deciles, with their within-decile position ``pos`` and
+    interleave index ``g``. Columns: doc_id, n_tokens, decile, pos, g,
+    ntot.
+
+    ntile puts floor(n/10) or floor(n/10)+1 rows in each decile, the
+    larger ones first, so decile d starts at rank
+    (d−1)·floor(n/10) + min(d−1, n%10) + 1 and every pos ≤ floor(n/10)
+    occurs in all ten deciles while pos = floor(n/10)+1 occurs only in
+    deciles 1..n%10. Hence g = 10·(pos − 1) + decile is exactly
+    row_number() OVER (ORDER BY pos, decile): a dense index over
+    [1, n]."""
+    from .scale_rank import ntile_bucket, with_global_rank
+
+    scored = docs.selectExpr(
         "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.expr(
-            "size(array_distinct(split(text, ' '))) * 1000000L "
-            "div size(split(text, ' '))"
-        ).alias("quality_ppm"),
+        "CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens",
+        "size(array_distinct(split(text, ' '))) * 1000000L "
+        "div size(split(text, ' ')) AS quality_ppm",
     )
     ranked = with_global_rank(
         scored,
         [F.col("quality_ppm").desc(), F.col("doc_id").asc()],
         "rnk",
         "ntot",
-    ).withColumn(
-        "decile", ntile_bucket(F.col("rnk"), F.col("ntot"), 10)
     )
-    # decile start by ntile arithmetic (first n%k buckets carry one
-    # extra row): start(d) = (d-1)*floor(n/k) + min(d-1, n%k) + 1 —
-    # equal to min(rnk) within every non-empty decile, without the
-    # per-decile min() aggregation + broadcast join the previous form
-    # paid for it.
-    d1 = F.col("decile").cast("bigint") - 1
-    dstart = (
-        d1 * F.floor(F.col("ntot") / 10)
-        + F.least(d1, F.col("ntot") % 10)
-        + 1
-    )
-    wd = ranked.select(
-        "decile",
+    return ranked.selectExpr(
+        "doc_id",
         "n_tokens",
-        (F.col("rnk") - dstart + 1).alias("pos"),
-    )
-    # ONE range-parted frame in the interleave order serves all four
-    # epochs; per-decile partials/offsets make every epoch's prefix sum
-    # a projection over the same window pass.
-    base = _range_parted(
-        wd, [F.col("pos").asc(), F.col("decile").asc()]
-    )
-    deciles = list(range(1, 11))
-    tok_d = {
-        d: F.sum(F.when(F.col("decile") == d, F.col("n_tokens")))
-        for d in deciles
-    }
-    partials = base.groupBy("__pid").agg(
-        *[tok_d[d].alias(f"__p{d}") for d in deciles]
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = partials.select(
-        "__pid",
-        *[F.sum(f"__p{d}").over(w_off).alias(f"__o{d}") for d in deciles],
-    )
-    w_in = (
-        Window.partitionBy("__pid")
-        .orderBy(F.col("pos").asc(), F.col("decile").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = base.join(F.broadcast(offsets), "__pid")
-    for d in deciles:
-        run_d = tok_d[d].over(w_in)
-        # global per-decile running sum with the oracle's NULL
-        # semantics: NULL iff no non-NULL n_tokens of decile d exists
-        # in the global prefix (both offset and local running sum NULL)
-        cum = cum.withColumn(
-            f"__s{d}",
-            F.when(
-                F.col(f"__o{d}").isNull() & run_d.isNull(),
-                F.lit(None).cast("bigint"),
-            ).otherwise(
-                F.coalesce(F.col(f"__o{d}"), F.lit(0))
-                + F.coalesce(run_d, F.lit(0))
-            ),
-        )
-
-    def cum_through(max_dec):
-        comps = [F.col(f"__s{d}") for d in deciles[:max_dec]]
-        all_null = comps[0].isNull()
-        for c in comps[1:]:
-            all_null = all_null & c.isNull()
-        total = comps[0] if len(comps) == 1 else sum(
-            (F.coalesce(c, F.lit(0)) for c in comps[1:]),
-            F.coalesce(comps[0], F.lit(0)),
-        )
-        return F.when(all_null, F.lit(None).cast("bigint")).otherwise(total)
-
-    epoch_entries = F.array(
-        *[
-            F.struct(
-                F.lit(epoch).alias("epoch"),
-                F.lit(max_dec).alias("maxd"),
-                cum_through(max_dec).alias("cum"),
-            )
-            for epoch, max_dec in _CURR_EPOCHS
-        ]
-    )
-    admitted = cum.select(
-        "decile",
+        "rnk",
+        "ntot",
+        f"{ntile_bucket('rnk', 'ntot', 10)} AS decile",
+    ).selectExpr(
+        "doc_id",
         "n_tokens",
-        "pos",
-        F.explode(
-            F.filter(
-                epoch_entries,
-                lambda x: (F.col("decile") <= x["maxd"])
-                & (x["cum"] <= _CURR_BUDGET),
-            )
-        ).alias("e"),
+        "decile",
+        f"{_CURR_POS} AS pos",
+        f"{_CURR_G} AS g",
+        "ntot",
     )
-    return (
-        admitted.groupBy(F.col("e.epoch").alias("epoch"), F.col("decile"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("tokens_admitted"),
-            F.max("pos").alias("depth_reached"),
-        )
-        .orderBy("epoch", "decile")
-    )
+
 
 _PACK_SHARD = 2000  # tokens per training shard (llm_pack_token_shards)
 
@@ -2565,59 +2527,49 @@ def pipeline_curriculum_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison on a unique (pos, decile) total order — no ties, no
     float fold.
 
-    Scale shape: identical to its parents — range-shuffle rank,
-    broadcast 10-row decile minima, one distributed prefix sum
-    (scale_rank.with_cumsum) over the admitted subset; the pack stage
-    adds ZERO exchanges beyond the prefix sum it shares with the
-    budget cut (shard id is arithmetic on the same cumulative column).
-    At 100 TB epoch packing runs per (day, source) partition first,
-    exactly as llm_pack_token_shards documents."""
-    from .scale_rank import ntile_bucket, with_cumsum, with_global_rank
+    Scale shape: identical to its parents — range-shuffle rank, ntile
+    and position arithmetic (_curriculum_interleave), then one
+    scale_rank.with_dense_cumsum prefix sum over the admitted subset
+    keyed on the interleave index g (deciles 1-3 leave gaps in g, which
+    keeps the sum exact and only thins its buckets); the pack stage
+    adds ZERO exchanges beyond the prefix sum it shares with the budget
+    cut (shard id is arithmetic on the same cumulative column). At
+    100 TB epoch packing runs per (day, source) partition first,
+    exactly as llm_pack_token_shards documents.
 
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    scored = docs.select(
-        "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.expr(
-            "size(array_distinct(split(text, ' '))) * 1000000L "
-            "div size(split(text, ' '))"
-        ).alias("quality_ppm"),
-    )
-    ranked = with_global_rank(
-        scored,
-        [F.col("quality_ppm").desc(), F.col("doc_id").asc()],
-        "rnk",
+    Optimization (known-index prefix sum): pos is arithmetic on
+    (rank, n) and the prefix-sum bucket is arithmetic on g, so no
+    decile aggregate, second range shuffle or pin follows the rank
+    pass. The running sum keeps SQL's NULL rule: a NULL-text document
+    whose bucket prefix is all NULL still reads the earlier buckets'
+    sum, and the budget filter keeps it in its NULL shard_id group as
+    the oracle does."""
+    from .scale_rank import with_dense_cumsum
+
+    adm = with_dense_cumsum(
+        _curriculum_interleave(load(spark, sf_dir, "documents")).where(
+            "decile <= 3"
+        ),
+        "g",
         "ntot",
-    ).withColumn(
-        "decile", ntile_bucket(F.col("rnk"), F.col("ntot"), 10)
-    )
-    dmin = ranked.groupBy("decile").agg(F.min("rnk").alias("dmin"))
-    wd = ranked.join(F.broadcast(dmin), "decile").select(
-        "doc_id",
-        "decile",
-        "n_tokens",
-        (F.col("rnk") - F.col("dmin") + 1).alias("pos"),
-    )
-    adm = with_cumsum(
-        wd.where(F.col("decile") <= 3),
-        [F.col("pos").asc(), F.col("decile").asc()],
         ["n_tokens"],
         ["__cum"],
     )
-    packed = adm.where(F.col("__cum") <= _CURR_BUDGET).withColumn(
-        "shard_id",
-        F.floor((F.col("__cum") - F.col("n_tokens")) / float(_PACK_SHARD))
-        .cast("int"),
+    packed = adm.where(f"__cum <= {_CURR_BUDGET}").selectExpr(
+        "doc_id",
+        "decile",
+        "n_tokens",
+        f"CAST(floor((__cum - n_tokens) / {_PACK_SHARD}D) AS INT)"
+        " AS shard_id",
     )
     return (
-        packed.groupBy("shard_id")
+        packed.groupBy(F.expr("shard_id"))
         .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("shard_tokens"),
-            F.countDistinct("decile").alias("n_deciles"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
+            F.expr("count(1) AS n_docs"),
+            F.expr("sum(n_tokens) AS shard_tokens"),
+            F.expr("count(DISTINCT decile) AS n_deciles"),
+            F.expr("min(doc_id) AS first_doc"),
+            F.expr("max(doc_id) AS last_doc"),
         )
-        .orderBy("shard_id")
+        .sort(F.expr("shard_id"))
     )

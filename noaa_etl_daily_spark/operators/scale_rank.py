@@ -38,6 +38,21 @@ a global window over the same rows runs 1.6-4.5x faster (PLANS.md).
 That is why the five ranked analytics in ``analytics.py`` (RFM, Lorenz,
 eval win-rate, KS, token budget) keep their global window until a
 fixture shows the one-task sort to be the bottleneck.
+
+Known-index prefix sums (``with_dense_cumsum``): when the order is
+already a unique integer index ``i`` known to lie in ``[1, n]`` — a
+closed form computed from an earlier rank, such as the curriculum
+interleave position ``10·(pos − 1) + decile`` — the range shuffle has
+nothing left to discover. Bucketing each row by ``(i − 1)·P div n`` is
+monotone in ``i`` and a pure function of the row, so the per-bucket
+partials, the P-row offsets window and the bucket-partitioned running
+window all agree on the buckets without sharing a materialized RDD:
+no range sample, no pin, one hash exchange. Gaps in the index (a
+filtered subset) keep the result exact and only thin the buckets.
+
+NULL rule shared by every prefix-sum helper: a running sum is NULL iff
+every value in its prefix is NULL, as in SQL — ``offset + local`` when
+both are present, else whichever one is.
 """
 
 from __future__ import annotations
@@ -131,49 +146,53 @@ def with_rank_and_cumsum(
     offsets = partials.select(
         "__pid",
         F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__rk_off"),
-        *[
-            F.coalesce(F.sum(f"__p_{c}").over(w_off), F.lit(0)).alias(
-                f"__off_{c}"
-            )
-            for c in sum_cols
-        ],
+        *[F.sum(f"__p_{c}").over(w_off).alias(f"__off_{c}") for c in sum_cols],
     )
     w_in = Window.partitionBy("__pid").orderBy(*order_cols)
     w_run = w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     out = (
-        base.withColumn("__rn", F.row_number().over(w_in))
+        base.select(
+            "*",
+            F.row_number().over(w_in).alias("__rn"),
+            *[F.sum(c).over(w_run).alias(f"__run_{c}") for c in sum_cols],
+        )
         .join(F.broadcast(offsets), "__pid")
         .withColumn(
             rank_col, (F.col("__rk_off") + F.col("__rn")).cast("bigint")
         )
-    )
-    for c, o in zip(sum_cols, cum_cols):
-        out = out.withColumn(
-            o, (F.col(f"__off_{c}") + F.sum(c).over(w_run)).cast("bigint")
+        .withColumns(
+            {
+                o: F.expr(f"CAST({_prefix_sum(c)} AS BIGINT)")
+                for c, o in zip(sum_cols, cum_cols)
+            }
         )
+    )
     return out.drop(
-        "__pid", "__rn", "__rk_off", *[f"__off_{c}" for c in sum_cols]
+        "__pid",
+        "__rn",
+        "__rk_off",
+        *[f"__off_{c}" for c in sum_cols],
+        *[f"__run_{c}" for c in sum_cols],
     )
 
 
-def ntile_bucket(r: Column, n: Column, k: int) -> Column:
-    """SQL-standard ``ntile(k)`` bucket as pure arithmetic on a 1-based
-    global rank ``r`` and total count ``n`` (first n%k buckets take one
-    extra row) — bit-identical to the single-partition ``F.ntile``.
-    Shared by with_ntile and any consumer that already carries a
-    distributed rank and wants the bucket without a second rank pass."""
-    base_i = F.floor(n / k)
-    rem = n % k
-    big = (base_i + 1) * rem  # rows living in the (base+1)-sized buckets
-    bucket = F.when(
-        r <= big, F.floor((r - 1) / (base_i + 1)) + 1
-    ).otherwise(
-        # guard: when n < k, every row sits in a size-1 bucket (rem = n,
-        # so r <= big always holds and this branch never divides by 0);
-        # nullif keeps the analyzer happy anyway
-        rem + F.floor((r - big - 1) / F.nullif(base_i, F.lit(0))) + 1
+def ntile_bucket(r: str, n: str, k: int) -> str:
+    """SQL-standard ``ntile(k)`` bucket as pure integer arithmetic on a
+    1-based global rank ``r`` and total count ``n`` (SQL text; the first
+    n%k buckets take one extra row) — bit-identical to the
+    single-partition ``F.ntile``. Shared by with_ntile and any consumer
+    that already carries a distributed rank and wants the bucket without
+    a second rank pass. SQL text, for ``F.expr`` or ``selectExpr``: one
+    py4j call where the Column form of this tree costs ~200."""
+    base, rem = f"(({n}) div {k})", f"(({n}) % {k})"
+    big = f"(({base} + 1) * {rem})"  # rows in the (base+1)-sized buckets
+    # when n < k every row sits in a size-1 bucket (rem = n, so r <= big
+    # always holds and ELSE never divides by 0); nullif keeps ANSI happy
+    return (
+        f"CAST(CASE WHEN ({r}) <= {big} THEN (({r}) - 1) div ({base} + 1) + 1"
+        f" ELSE {rem} + (({r}) - {big} - 1) div nullif({base}, 0) + 1"
+        " END AS INT)"
     )
-    return bucket.cast("int")
 
 
 def with_ntile(
@@ -185,7 +204,7 @@ def with_ntile(
     original query's oracle."""
     ranked = with_global_rank(df, order_cols, "__rank", "__ntot")
     return ranked.withColumn(
-        out_col, ntile_bucket(F.col("__rank"), F.col("__ntot"), k)
+        out_col, F.expr(ntile_bucket("__rank", "__ntot", k))
     ).drop("__rank", "__ntot")
 
 
@@ -208,24 +227,83 @@ def with_cumsum(
     )
     offsets = partials.select(
         "__pid",
-        *[
-            F.coalesce(F.sum(f"__p_{c}").over(w_off), F.lit(0)).alias(
-                f"__off_{c}"
-            )
-            for c in sum_cols
-        ],
+        *[F.sum(f"__p_{c}").over(w_off).alias(f"__off_{c}") for c in sum_cols],
     )
     w_in = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = base.join(F.broadcast(offsets), "__pid")
-    for c, o in zip(sum_cols, out_cols):
-        out = out.withColumn(
-            o,
-            (F.col(f"__off_{c}") + F.sum(c).over(w_in)).cast("bigint"),
+    out = (
+        base.select(
+            "*", *[F.sum(c).over(w_in).alias(f"__run_{c}") for c in sum_cols]
         )
-    return out.drop(
-        "__pid", *[f"__off_{c}" for c in sum_cols]
+        .join(F.broadcast(offsets), "__pid")
+        .withColumns(
+            {
+                o: F.expr(f"CAST({_prefix_sum(c)} AS BIGINT)")
+                for c, o in zip(sum_cols, out_cols)
+            }
+        )
     )
+    return out.drop(
+        "__pid",
+        *[f"__off_{c}" for c in sum_cols],
+        *[f"__run_{c}" for c in sum_cols],
+    )
+
+
+def with_dense_cumsum(
+    df: DataFrame,
+    idx_col: str,
+    n_col: str,
+    sum_cols: list[str],
+    out_cols: list[str],
+) -> DataFrame:
+    """Exact running sums of ``sum_cols`` in ``idx_col`` order, where
+    ``idx_col`` is a unique integer index known to lie in
+    ``[1, n_col]`` (``n_col`` carries the same n on every row). The
+    bucket ``(idx − 1)·P div n`` replaces the range shuffle and its
+    pin (module docstring): per-bucket partials, a P-row offsets
+    window, and one running window partitioned by bucket. Built from
+    SQL text, so it costs a few dozen py4j calls, not hundreds."""
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    base = df.selectExpr("*", f"({idx_col} - 1) * {p} div {n_col} AS __bkt")
+    offsets = (
+        base.groupBy("__bkt")
+        .agg(*[F.expr(f"sum({c}) AS __p_{c}") for c in sum_cols])
+        .selectExpr(
+            "__bkt",
+            *[
+                f"sum(__p_{c}) OVER (ORDER BY __bkt ROWS BETWEEN "
+                f"UNBOUNDED PRECEDING AND 1 PRECEDING) AS __off_{c}"
+                for c in sum_cols
+            ],
+        )
+    )
+    run = base.selectExpr(
+        "*",
+        *[
+            f"sum({c}) OVER (PARTITION BY __bkt ORDER BY {idx_col} ROWS "
+            f"BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __run_{c}"
+            for c in sum_cols
+        ],
+    )
+    return (
+        run.join(F.broadcast(offsets), "__bkt")
+        .selectExpr(
+            "*", *[f"{_prefix_sum(c)} AS {o}" for c, o in zip(sum_cols, out_cols)]
+        )
+        .drop(
+            "__bkt",
+            *[f"__off_{c}" for c in sum_cols],
+            *[f"__run_{c}" for c in sum_cols],
+        )
+    )
+
+
+def _prefix_sum(c: str) -> str:
+    """SQL text of the global running sum of ``c`` from its bucket
+    offset ``__off_c`` (sum over earlier buckets) and local running sum
+    ``__run_c``, with SQL's NULL rule: NULL only when both are NULL."""
+    return f"coalesce(__off_{c} + __run_{c}, __off_{c}, __run_{c})"

@@ -142,14 +142,15 @@ def win_rank_dense_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("g.l_returnflag").eqNullSafe(F.col("t.l_returnflag"))
         & F.col("g.l_quantity").eqNullSafe(F.col("t.l_quantity")),
     )
-    pos = F.col("g.grk") - F.col("g.before")
     return out.select(
         F.col("g.l_orderkey").alias("l_orderkey"),
         F.col("g.l_linenumber").alias("l_linenumber"),
         F.col("g.l_quantity").alias("l_quantity"),
         F.col("t.rank_in_flag").cast("long").alias("qty_rank"),
         F.col("t.dr").cast("long").alias("qty_dense_rank"),
-        ntile_bucket(pos, F.col("g.n"), 4).cast("long").alias("qty_quartile"),
+        F.expr(ntile_bucket("g.grk - g.`before`", "g.n", 4))
+        .cast("long")
+        .alias("qty_quartile"),
     )
 
 
@@ -412,7 +413,7 @@ def win_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("pct_rank"),
             F.round(F.col("__pos").cast("double") / n, 6).alias("cume"),
-            ntile_bucket(F.col("__pos"), n, 4).cast("int").alias("quartile"),
+            F.expr(ntile_bucket("__pos", "n", 4)).alias("quartile"),
         )
     )
 

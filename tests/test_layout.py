@@ -487,13 +487,13 @@ def test_registry_wide_plan_lint(spark, sf_dir):
         # total reduces
         "llm_pack_token_shards",
         "pipeline_token_budget_curriculum",  # P-row offsets windows
-                                      # (distributed rank + per-epoch
-                                      # prefix sums) + 10-row decile-min
-                                      # broadcast
+                                      # (distributed rank + one
+                                      # index-bucketed prefix sum of
+                                      # the 4 epoch sums)
         "pipeline_curriculum_pack",   # same scale_rank machinery: P-row
-                                      # offsets windows + one epoch-1
-                                      # prefix sum + 10-row decile-min
-                                      # broadcast
+                                      # offsets windows (distributed
+                                      # rank + one index-bucketed
+                                      # epoch-1 prefix sum)
         # r13 low-cardinality-window rewrites (guide §2.5): each key's
         # single-partition stages are scale_rank's P-row offsets window
         # plus a ≤3-row per-flag prefix/offset window — never raw data
@@ -527,9 +527,11 @@ def test_registry_wide_plan_lint(spark, sf_dir):
         # rows (P = shuffle-partitions conf) + bounded result windows
         "llm_pack_token_shards",      # distributed prefix sum (P-row offsets)
         "pipeline_token_budget_curriculum",  # same P-row offsets windows
-                                      # (scale_rank rank + 4 epoch cumsums)
+                                      # (scale_rank rank + one
+                                      # with_dense_cumsum of 4 epoch sums)
         "pipeline_curriculum_pack",   # same P-row offsets windows
-                                      # (scale_rank rank + epoch-1 cumsum)
+                                      # (scale_rank rank + one
+                                      # with_dense_cumsum epoch-1 sum)
         # bounded post-reduction grains
         "evt_activity_autocorr",      # DAY-grain lead window
         "evt_alert_debounce",         # HOUR-grain run windows

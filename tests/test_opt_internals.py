@@ -18,6 +18,10 @@
   fixture file reads with the cached schema and fires no Spark job,
   with the same schema and rows as an inferred read; a rewrite is
   re-inferred; a directory-shaped table still loads.
+- ``with_dense_cumsum``: prefix sums bucketed by arithmetic on a known
+  index must equal the single-partition window at any partition
+  count, NULLs included, with no pin; the curriculum interleave index
+  it is keyed on must equal row_number over (pos, decile).
 """
 
 from __future__ import annotations
@@ -353,3 +357,94 @@ def test_directory_shaped_table_still_loads(spark, tmp_path):
         got = load(spark, str(sf), "nation")
         assert sorted(r.n_nationkey for r in got.collect()) == list(range(5))
     assert os.path.abspath(path) not in _SCHEMAS
+
+
+def _window_cumsum(df):
+    """Reference: the single-partition running sum the helper replaces."""
+    return df.selectExpr(
+        "idx",
+        "sum(v) OVER (ORDER BY idx ROWS BETWEEN UNBOUNDED PRECEDING "
+        "AND CURRENT ROW) AS cum",
+    )
+
+
+def _dense_cumsum_cases(p: int):
+    """(name, n, [(idx, v)]) frames for with_dense_cumsum under P = p."""
+    n = 200
+    starts = {i for i in range(1, n + 1) if (i - 1) * p // n != (i - 2) * p // n}
+    # every bucket opens on a NULL, after an all-NULL leading prefix
+    nulls = starts | {1, 2, 3, 4}
+    dense = [(i, None if i in nulls else i % 7 - 2) for i in range(1, n + 1)]
+    # deciles 1-3 of a 10-way interleave (the pack key's admitted subset)
+    gaps = [(i, None if i % 4 == 1 else i) for i in range(1, 301) if i % 10 in (1, 2, 3)]
+    return [
+        ("dense", n, dense),
+        ("gaps", 300, gaps),
+        ("n<P", 5, [(1, None), (2, 3), (3, None), (4, 5), (5, 1)]),
+        ("one row", 1, [(1, 9)]),
+        ("empty", 7, []),
+    ]
+
+
+def test_dense_cumsum_matches_single_partition_window(spark):
+    """with_dense_cumsum buckets by arithmetic on a known index instead
+    of range-sampling: its running sums must equal the single-partition
+    window's at any partition count, with SQL's NULL rule (NULL iff
+    the whole prefix is NULL) across bucket starts, over an index with
+    gaps, with fewer rows than buckets, and on one row or none."""
+    from noaa_etl_daily_spark.operators.scale_rank import with_dense_cumsum
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for p in (1, 3, 8, 64):
+            spark.conf.set("spark.sql.shuffle.partitions", str(p))
+            for name, n, rows in _dense_cumsum_cases(p):
+                # a local VALUES relation: any ExistingRDD would be a pin
+                vals = ", ".join(
+                    f"({i}L, {'NULL' if v is None else f'{v}L'})" for i, v in rows
+                )
+                df = spark.sql(
+                    f"SELECT idx, v, {n}L AS n FROM VALUES {vals or '(0L, 0L)'}"
+                    f" AS t(idx, v) WHERE {bool(rows)}"
+                )
+                got = with_dense_cumsum(df, "idx", "n", ["v"], ["cum"])
+                assert "ExistingRDD" not in _final_plan(got), (p, name)
+                got = sorted(tuple(r) for r in got.select("idx", "cum").collect())
+                ref = sorted(tuple(r) for r in _window_cumsum(df).collect())
+                assert got == ref, (p, name)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_interleave_index_is_row_number_over_pos_decile(spark):
+    """The curriculum keys' closed forms over a 1-based rank r of n rows
+    — decile (ntile_bucket), within-decile position and interleave
+    index g = 10·(pos − 1) + decile — equal ntile(10), r − min(r) + 1
+    per decile, and row_number() OVER (ORDER BY pos, decile), for every
+    n in 0..25 and n = 500."""
+    from noaa_etl_daily_spark.operators.pipelines import _CURR_G, _CURR_POS
+    from noaa_etl_daily_spark.operators.scale_rank import ntile_bucket
+
+    ranks = spark.createDataFrame(
+        [(n, r) for n in [*range(26), 500] for r in range(1, n + 1)],
+        "ntot long, rnk long",
+    )
+    got = ranks.selectExpr(
+        "ntot", "rnk", f"{ntile_bucket('rnk', 'ntot', 10)} AS decile"
+    ).selectExpr(
+        "ntot", "rnk", "decile", f"{_CURR_POS} AS pos", f"{_CURR_G} AS g"
+    ).selectExpr(
+        "*",
+        "ntile(10) OVER (PARTITION BY ntot ORDER BY rnk) AS ref_decile",
+        "rnk - min(rnk) OVER (PARTITION BY ntot, decile) + 1 AS ref_pos",
+    ).selectExpr(
+        "*",
+        "row_number() OVER (PARTITION BY ntot ORDER BY pos, decile) AS ref_g",
+    )
+    rows = got.collect()
+    assert len(rows) == sum(range(26)) + 500
+    for r in rows:
+        assert r.decile == r.ref_decile, r
+        assert r.pos == r.ref_pos, r
+        assert r.g == r.ref_g, r
+        assert 1 <= r.g <= r.ntot, r

@@ -2142,3 +2142,58 @@ def test_ivf_partition_pruned_matches_full_scan_and_recall(spark, sf_dir):
     assert recall >= 0.45, f"pruned IVF recall {recall:.2f} below floor"
     per_q = Counter(r.query_id for r in rows)
     assert max(per_q.values()) <= 5
+
+
+def _write_documents(spark, path, texts):
+    spark.createDataFrame(
+        [(i + 1, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    ).coalesce(1).write.parquet(str(path / "documents.parquet"))
+
+
+def test_curriculum_keys_keep_null_text_docs_in_admitted_deciles(
+    spark, tmp_path
+):
+    """NULL-text documents rank last, so on a mostly-NULL corpus they
+    fill the admitted deciles 1-3. Their NULL token counts must leave
+    the running budget sum at the earlier documents' total, as SQL's
+    running sum does, at every partition count — the pack key once
+    dropped such a row when a prefix-sum partition opened on NULLs
+    (row count 1 against the oracle's 2 under 3 or 8 partitions)."""
+    import duckdb
+
+    from noaa_etl_daily_spark.registry import load_all
+
+    from .conftest import assert_same_results
+
+    reg = load_all()
+    words = [" ".join(f"w{(i * j) % 11}" for j in range(3 + i % 5)) for i in range(40)]
+    corpora = {
+        "one_null_of_3": ["a b c", None, "a a b"],
+        "five_null_of_6": ["x y", None, None, None, None, None],
+        "25_null_of_29": words[:4] + [None] * 25,
+    }
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for name, texts in corpora.items():
+            sf = tmp_path / name
+            sf.mkdir()
+            _write_documents(spark, sf, texts)
+            con = duckdb.connect()
+            con.execute(
+                "CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf / 'documents.parquet'}/*.parquet')"
+            )
+            for p in (1, 3, 8):
+                spark.conf.set("spark.sql.shuffle.partitions", str(p))
+                for key in (
+                    "pipeline_token_budget_curriculum",
+                    "pipeline_curriculum_pack",
+                ):
+                    q = reg[key]
+                    try:
+                        assert_same_results(q.builder(spark, str(sf)), con, q.oracle)
+                    except AssertionError as e:
+                        raise AssertionError(f"{key} on {name}, P={p}: {e}")
+            con.close()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
