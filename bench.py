@@ -18,7 +18,13 @@ Methodology:
 - Warm-up runs the ENTIRE headline set once untimed before the timed
   pass: JVM JIT of join/agg/window codegen paths is worth ~2s on the
   first execution of each query shape, and steady-state plan time is
-  what the benchmark is defined to measure. The per-table count() also
+  what the benchmark is defined to measure. The warm-up also leaves
+  every query's compiled classes in Spark's generated-class cache
+  because ``get_spark`` sizes that cache
+  (``session.CODEGEN_CACHE_ENTRIES``): the headline set needs more than
+  Spark's default of 100 entries, and with the default a query's
+  warm-up classes were evicted before its timed reps. The per-table
+  count() also
   primes ``tables.load``'s schema cache: each fixture file's footers are
   read once there, and every later load of the unchanged file passes the
   cached schema and fires no footer job. Direct ``spark.read.parquet``
@@ -141,8 +147,9 @@ def main() -> None:
 
     # Warm-up: count() each table (which also fills tables.load's schema
     # cache, so builders' fixture loads fire no footer job), then run the
-    # full headline set once untimed (JIT + codegen cache for every query
-    # shape) so the timed pass measures steady-state plan execution.
+    # full headline set once untimed (JIT + the generated-class cache
+    # get_spark sizes for every query shape) so the timed pass measures
+    # steady-state plan execution.
     from noaa_etl_daily_spark.tables import TABLE_NAMES, load
 
     for t in TABLE_NAMES:

@@ -13,7 +13,7 @@ normative spec is SURVEY.md §2.
 
 from .registry import REGISTRY, load_all, register
 from .session import configure_session, get_spark
-from .tables import load, tables
+from .tables import load
 
 __all__ = [
     "REGISTRY",
@@ -22,5 +22,4 @@ __all__ = [
     "configure_session",
     "get_spark",
     "load",
-    "tables",
 ]

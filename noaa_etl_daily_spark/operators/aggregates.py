@@ -112,14 +112,38 @@ def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct counts per group. Spark plans multi-distinct via
-    expand + two-phase aggregation; exact-distinct is the expensive path
-    at 100 TB (see agg_approx_count_distinct for the sketch path)."""
+    """Exact distinct counts per group; exact-distinct is the expensive
+    path at 100 TB (see agg_approx_count_distinct for the sketch path).
+
+    This is the plan Spark makes for several DISTINCT aggregates (one
+    Expand row per distinct group, a two-phase aggregation that
+    deduplicates, then one more aggregation), written out with grouping
+    sets. Catalyst's own rewrite numbers the distinct groups in the
+    hash order of their per-build expression ids, so two builds of
+    ``countDistinct(a), countDistinct(b)`` could emit the Expand
+    projections in either order, and each order compiled its own
+    classes. Grouping sets keep the order as written."""
     li = load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_suppliers"),
-        F.count(F.lit(1)).alias("n_rows"),
+    # grouping_id(): 1 for (flag, partkey), 2 for (flag, suppkey), 3 for
+    # (flag). SQL text, since each Column node costs py4j round trips.
+    return (
+        li.groupingSets(
+            [
+                ["l_returnflag", "l_partkey"],
+                ["l_returnflag", "l_suppkey"],
+                ["l_returnflag"],
+            ],
+            "l_returnflag",
+            "l_partkey",
+            "l_suppkey",
+        )
+        .agg(F.expr("grouping_id() AS gid"), F.expr("count(1) AS n"))
+        .groupBy("l_returnflag")
+        .agg(
+            F.expr("count(IF(gid = 1, l_partkey, NULL)) AS n_parts"),
+            F.expr("count(IF(gid = 2, l_suppkey, NULL)) AS n_suppliers"),
+            F.expr("sum(IF(gid = 3, n, NULL)) AS n_rows"),
+        )
     )
 
 
@@ -1039,7 +1063,9 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantities are whole) and the half-total comparison is 2·cum ≥
     tot in integer arithmetic — exact on both engines; the ordering
     tie-breaks on (orderkey, linenumber) so the scan order never
-    matters."""
+    matters. A NULL price sorts LAST, as in the oracle's ORDER BY
+    (DuckDB's default; Spark's ascending default, NULLS FIRST, would put
+    a NULL-price row's weight ahead of every priced row)."""
     from pyspark.sql.window import Window as W
 
     from .scale_rank import with_cumsum
@@ -1057,7 +1083,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows,
         [
             F.col("l_returnflag"),
-            F.col("l_extendedprice"),
+            F.col("l_extendedprice").asc_nulls_last(),
             F.col("l_orderkey"),
             F.col("l_linenumber"),
         ],

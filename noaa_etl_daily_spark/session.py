@@ -16,6 +16,16 @@ Design notes (SURVEY.md §7.3 Wave 0, §7.4 G1/G6):
   in task-scheduling overhead. On a real cluster this would be sized to
   ~128 MB of shuffle data per partition instead (AQE's coalescing makes the
   initial number mostly a ceiling).
+- Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+  default 100) is raised to ``CODEGEN_CACHE_ENTRIES``. It holds the
+  Janino-compiled whole-stage and expression classes, keyed by source
+  and class loader, and evicts the least recently used. One pass over
+  ``etl_daily``'s 14 keys needs 232 entries and visits them in a cycle,
+  so with 100 entries every warm pass recompiled ~216-223 classes
+  (~1.3 s of a ~5.8 s pass). The conf is static: Spark reads it once,
+  when ``CodeGenerator``'s cache is first built in the JVM, so it is set
+  in ``get_spark`` and cannot go in ``configure_session``. Sessions the
+  driver builds itself keep Spark's 100.
 """
 
 from __future__ import annotations
@@ -40,6 +50,14 @@ _SESSION_CONFS = {
     # makes every query ANSI-mode-invariant (tests/test_ansi_invariance).
     "spark.sql.legacy.sizeOfNull": "false",
 }
+
+#: Entries in Spark's generated-class cache (static, set by ``get_spark``).
+#: About 4x what one pass of the largest benchmark workload needs
+#: (``etl_daily`` 232, ``etl_load`` 115), so a session that repeats a set
+#: of keys compiles nothing after its first pass. One pass over all 465
+#: keys compiles 5,225 classes; a session that runs each key once gains
+#: nothing from holding them all.
+CODEGEN_CACHE_ENTRIES = 1000
 
 #: AQE override knob (same per-dataset sizing philosophy as shuffle
 #: partitions): AQE's runtime re-planning inserts a materialization
@@ -82,7 +100,15 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession."""
+    """Build (or reuse) the engine's SparkSession.
+
+    Besides the runtime confs of ``configure_session``, this sets the
+    static ones, which take effect only when the session's JVM is first
+    built: ``spark.sql.codegen.cache.maxEntries`` is read once, when
+    ``CodeGenerator`` builds its class cache, and is set to
+    ``CODEGEN_CACHE_ENTRIES`` so warm passes reuse compiled classes. A
+    session created elsewhere (e.g. by the driver) keeps Spark's 100.
+    """
     cores = default_parallelism()
     master = master or f"local[{cores}]"
     if shuffle_partitions is None:
@@ -100,6 +126,7 @@ def get_spark(
         # broadcast them instead of shuffling the fact table.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in _SESSION_CONFS.items():
         builder = builder.config(key, value)

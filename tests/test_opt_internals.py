@@ -22,6 +22,9 @@
   index must equal the single-partition window at any partition
   count, NULLs included, with no pin; the curriculum interleave index
   it is keyed on must equal row_number over (pos, decile).
+- ``get_spark``'s generated-class cache: a second pass over keys whose
+  classes outnumber Spark's default cache compiles nothing, and
+  ``import noaa_etl_daily_spark.tables`` gives the module.
 """
 
 from __future__ import annotations
@@ -448,3 +451,51 @@ def test_interleave_index_is_row_number_over_pos_decile(spark):
         assert r.pos == r.ref_pos, r
         assert r.g == r.ref_g, r
         assert 1 <= r.g <= r.ntot, r
+
+
+#: Together these make 136 generated-class cache entries at sf0.01 with
+#: AQE off, more than Spark's default cache of 100: with the default
+#: every warm pass recompiled 128 of them.
+_CODEGEN_KEYS = (
+    "pipeline_token_budget_curriculum",
+    "pipeline_regional_volume",
+    "join_broadcast_chain",
+)
+
+
+def test_warm_pass_compiles_no_generated_class(spark, sf_dir, monkeypatch):
+    """Janino compiles counted by Spark's ``CodegenMetrics``: the second
+    pass over ``_CODEGEN_KEYS`` must find every class in the cache.
+    AQE is off here because it numbers whole-stage codegen stages, and
+    the stage id is part of each class's source, in the order it
+    creates query stages: that order follows which earlier stages
+    finish first, so under AQE a pass can meet a new variant of a
+    class it has already compiled (CHANGES.md)."""
+    from noaa_etl_daily_spark.registry import load_all
+    from noaa_etl_daily_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    reg = load_all()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = compiles.METRIC_COMPILATION_TIME()
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    monkeypatch.setenv("SPARK_GRAFT_AQE", "false")
+    counts = []
+    try:
+        for _ in range(2):
+            before = compiles.getCount()
+            for key in _CODEGEN_KEYS:
+                df = reg[key].builder(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+            counts.append(compiles.getCount() - before)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert counts[1] == 0, f"compiles per pass: {counts}"
+
+
+def test_tables_module_is_not_shadowed():
+    import noaa_etl_daily_spark.tables as t
+
+    assert t.__name__ == "noaa_etl_daily_spark.tables"

@@ -2197,3 +2197,70 @@ def test_curriculum_keys_keep_null_text_docs_in_admitted_deciles(
             con.close()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_weighted_running_sums_skip_null_weights(spark, tmp_path):
+    """``agg_weighted_median`` weighs each price by ``l_quantity`` and
+    ``win_pareto_8020`` by the price in cents, each through a
+    distributed running sum. NULL weights must leave that sum where
+    SQL's window leaves it at every partition count: a run of NULLs
+    that opens the whole order (and so the first range partitions),
+    a NULL first in a flag's order, NULLs spread through a flag, a flag
+    whose weights are all NULL, and NULL prices."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from noaa_etl_daily_spark.registry import load_all
+    from noaa_etl_daily_spark.tables import path_for
+
+    from .conftest import assert_same_results
+
+    rows = []
+    for flag, n in (("A", 24), ("N", 18), ("R", 12), ("X", 5)):
+        for i in range(n):
+            price = 900.0 + 37.25 * ((i * 7) % n)  # a permutation of i
+            rank = (i * 7) % n  # position in the flag's price order
+            qty = float(1 + (i * 5) % 9)
+            if (
+                (flag == "A" and rank < 3)
+                or (flag == "N" and rank == 0)
+                or (flag == "R" and rank % 3 == 1)
+                or flag == "X"
+            ):
+                qty = None
+            if (flag, rank) in {("A", 10), ("A", 17), ("R", 5)}:
+                price = None
+            rows.append((len(rows) + 1, 1 + i % 7, qty, price, flag))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    cols = list(zip(*rows))
+    pq.write_table(
+        pa.table({
+            "l_orderkey": pa.array(cols[0], pa.int64()),
+            "l_linenumber": pa.array(cols[1], pa.int32()),
+            "l_quantity": pa.array(cols[2], pa.float64()),
+            "l_extendedprice": pa.array(cols[3], pa.float64()),
+            "l_returnflag": pa.array(cols[4], pa.string()),
+        }),
+        path_for(str(sf), "lineitem"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{path_for(str(sf), 'lineitem')}')"
+    )
+    reg = load_all()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for p in (1, 3, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(p))
+            for key in ("agg_weighted_median", "win_pareto_8020"):
+                q = reg[key]
+                try:
+                    assert_same_results(q.builder(spark, str(sf)), con, q.oracle)
+                except AssertionError as e:
+                    raise AssertionError(f"{key}, P={p}: {e}")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        con.close()

@@ -1,10 +1,21 @@
 """Registry-wide perf census (optimization r12, guide §1.1).
 
 Runs EVERY registry key once at a small SF through the noop sink and
-prints one JSON line per key: {"name": ..., "build_s": ..., "exec_s": ...}.
+prints one JSON line per key:
+{"name": ..., "build_s": ..., "exec_s": ..., "codegen_classes": ...}.
 `build_s` is driver-side plan-construction time (py4j/literal work —
-the §B class), `exec_s` is the noop-sink execution wall. A final
-summary line lists the slowest tail by exec_s and by build_s.
+the §B class), `exec_s` is the noop-sink execution wall, and
+`codegen_classes` is how many classes Janino compiled while the key was
+built and run (the count delta of Spark's `CodegenMetrics` compilation
+histogram). A final summary line lists the slowest tail by exec_s and by
+build_s, and the total of `codegen_classes`.
+
+Each key runs once. While nothing is evicted from `get_spark`'s
+generated-class cache (`session.CODEGEN_CACHE_ENTRIES` entries) every
+compile is a new cache entry, so the total is the number of entries the
+keys need together: the figure that sizes the cache. Once the total
+nears the cap it is an upper bound, since an evicted class that a later
+key needs is compiled again.
 
 Usage: python tools_perf_census.py [sf_dir] [keys...]
 Default sf_dir /root/testdata/sf0.01, all registry keys.
@@ -41,10 +52,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for t in TABLE_NAMES:
         load(spark, sf_dir, t).count()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
 
     rows = []
     for name in names:
         spark.sparkContext.setJobDescription(f"census:{name}")
+        compiled = compiles.getCount()
         t0 = time.perf_counter()
         try:
             df = registry[name].builder(spark, sf_dir)
@@ -58,6 +72,7 @@ def main() -> None:
             "name": name,
             "build_s": round(t1 - t0, 3),
             "exec_s": round(t2 - t1, 3),
+            "codegen_classes": compiles.getCount() - compiled,
         }
         rows.append(row)
         print(json.dumps(row), flush=True)
@@ -71,6 +86,7 @@ def main() -> None:
         ],
         "total_exec_s": round(sum(r["exec_s"] for r in rows), 1),
         "total_build_s": round(sum(r["build_s"] for r in rows), 1),
+        "total_codegen_classes": sum(r["codegen_classes"] for r in rows),
         "n": len(rows),
     }
     print(json.dumps(summary))
