@@ -781,7 +781,10 @@ def sink_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("compression", "zstd")
         .parquet(out)
     )
-    back = spark.read.parquet(out)
+    # read back with the schema just written: the files hold exactly
+    # it, and an inferred read would fire a footer-reading Spark job on
+    # every call (an empty write survives too, see sink_parquet_partitioned)
+    back = spark.read.schema(li.schema).parquet(out)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
@@ -1987,7 +1990,9 @@ def _pdv_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     inside, the data dir)."""
     out = _scratch("pdv_base", _sf_tag(sf_dir), "orders")
     dv = _scratch("pdv_vector", _sf_tag(sf_dir), "orders")
-    params = "pdv_layout:files=4:pred=mod5_2000_6000"
+    # the vector holds absolute base-file paths: a layout copied or
+    # moved with its scratch root must not validate at the new place
+    params = f"pdv_layout:files=4:pred=mod5_2000_6000:at={out}"
     if _cached(out, sf_dir, "orders", params) and _cached(
         dv, sf_dir, "orders", params
     ):
@@ -2096,7 +2101,7 @@ def _pdv_compacted(spark: SparkSession, sf_dir: str) -> str:
     import shutil
 
     out = _scratch("pdv_compacted", _sf_tag(sf_dir), "orders")
-    params = "pdv_compacted:src=mod5_2000_6000:v2"
+    params = f"pdv_compacted:src=mod5_2000_6000:v2:at={out}"  # see _pdv_layout
     if _cached(out, sf_dir, "orders", params):
         return out
     shutil.rmtree(out, ignore_errors=True)

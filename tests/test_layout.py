@@ -1963,3 +1963,30 @@ def test_dv_compaction_carries_untouched_and_drops_join(spark, sf_dir):
     df = registry["scan_dv_compaction_sim"].builder(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan
+
+
+def test_delete_vector_layouts_survive_a_moved_scratch_root(
+    spark, sf_dir, oracle, tmp_path, monkeypatch
+):
+    """The positional delete vector and the DV compaction manifest
+    hold absolute ``file:`` paths, so a scratch root copied to a new
+    place (a copied or moved checkout) must not serve them as cached:
+    both keys still match their oracles after the copy, with the
+    original root gone."""
+    import shutil
+
+    from noaa_etl_daily_spark.operators import scans
+
+    from .conftest import assert_same_results
+
+    registry = load_all()
+    keys = ("scan_positional_delete_sim", "scan_dv_compaction_sim")
+    first, second = tmp_path / "a", tmp_path / "b"
+    monkeypatch.setattr(scans, "SCRATCH", str(first))
+    scans._pdv_compacted(spark, sf_dir)  # builds _pdv_layout too
+    shutil.copytree(first, second)
+    shutil.rmtree(first)
+    monkeypatch.setattr(scans, "SCRATCH", str(second))
+    for key in keys:
+        df = registry[key].builder(spark, sf_dir)
+        assert_same_results(df, oracle, registry[key].oracle)

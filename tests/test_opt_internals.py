@@ -25,16 +25,23 @@
 - ``get_spark``'s generated-class cache: a second pass over keys whose
   classes outnumber Spark's default cache compiles nothing, and
   ``import noaa_etl_daily_spark.tables`` gives the module.
+- The sink keys' own work: ``sink_compact_small_files`` writes its
+  64-shard input once per fixture, and the read-backs that pass the
+  schema just written give the same schema and rows as an inferred
+  read with fewer jobs.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import struct
+import sys
 import uuid
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -499,3 +506,109 @@ def test_tables_module_is_not_shadowed():
     import noaa_etl_daily_spark.tables as t
 
     assert t.__name__ == "noaa_etl_daily_spark.tables"
+
+
+def _shards(path):
+    """{name: (size, st_mtime_ns)} of the parquet files in ``path``."""
+    return {
+        e.name: (e.stat().st_size, e.stat().st_mtime_ns)
+        for e in os.scandir(path)
+        if e.name.endswith(".parquet")
+    }
+
+
+def _compaction(monkeypatch, scratch):
+    """(builder, fragmented-input dir for ``sf``) of the compaction key,
+    with the engine's scratch root moved to ``scratch``."""
+    from noaa_etl_daily_spark.operators import scans
+    from noaa_etl_daily_spark.registry import load_all
+
+    monkeypatch.setattr(scans, "SCRATCH", str(scratch))
+    build = load_all()["sink_compact_small_files"].builder
+
+    def frag(sf):
+        return os.path.join(str(scratch), "compact", scans._sf_tag(sf), "fragmented")
+
+    return build, frag
+
+
+def test_compaction_input_is_written_once_per_fixture(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    build, frag = _compaction(monkeypatch, tmp_path)
+    _, first = _count_jobs(spark, lambda: build(spark, sf_dir))
+    shards = _shards(frag(sf_dir))
+    assert len(shards) == 64
+    _, second = _count_jobs(spark, lambda: build(spark, sf_dir))
+    assert _shards(frag(sf_dir)) == shards
+    assert second < first, f"build jobs: first {first}, second {second}"
+
+
+def test_rewritten_orders_fixture_rebuilds_compaction_input(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    import pyarrow.parquet as pq
+
+    from noaa_etl_daily_spark.tables import path_for
+
+    build, frag = _compaction(monkeypatch, tmp_path / "scratch")
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src, dst = path_for(sf_dir, "orders"), path_for(str(sf), "orders")
+    shutil.copyfile(src, dst)
+    build(spark, str(sf))
+    before = _shards(frag(str(sf)))
+
+    pq.write_table(pq.read_table(src).slice(0, 1000), dst)
+    got = build(spark, str(sf))
+    assert sum(r.n_orders for r in got.collect()) == 1000
+    assert not set(before) & set(_shards(frag(str(sf))))
+
+
+_READBACK_KEYS = (
+    "sink_parquet_zstd",
+    "sink_compact_small_files",
+    "sink_range_sorted_layout",
+    "sink_dynamic_partition_overwrite",
+    "sink_zorder_layout",
+)
+
+
+def _infer_builder_reads(monkeypatch):
+    """Drop every schema an operator module passes to
+    ``spark.read.schema``, so the builders' read-backs infer their
+    schema from the files. ``tables.load`` keeps its cached fixture
+    schemas."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real = DataFrameReader.schema
+
+    def schema(self, s):
+        caller = sys._getframe(1).f_globals.get("__name__", "")
+        if caller.startswith("noaa_etl_daily_spark.operators."):
+            return self
+        return real(self, s)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+
+
+@pytest.mark.parametrize("key", _READBACK_KEYS)
+def test_written_schema_read_back_matches_inference(
+    spark, sf_dir, monkeypatch, key
+):
+    """Same schema and rows as an inferred read-back, and fewer build
+    jobs: the footer-reading inference job is gone. Rows are collected
+    before the next call overwrites the output."""
+    from noaa_etl_daily_spark.registry import load_all
+
+    build = load_all()[key].builder
+    build(spark, sf_dir).collect()  # once-per-fixture layouts are built
+    got, jobs = _count_jobs(spark, lambda: build(spark, sf_dir))
+    got_rows = _rows(got)
+    with monkeypatch.context() as m:
+        _infer_builder_reads(m)
+        want, inferred_jobs = _count_jobs(spark, lambda: build(spark, sf_dir))
+        want_rows = _rows(want)
+    assert got.schema == want.schema
+    pd.testing.assert_frame_equal(got_rows, want_rows, check_exact=True)
+    assert jobs < inferred_jobs, f"jobs {jobs}, inferred {inferred_jobs}"

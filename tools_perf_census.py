@@ -2,13 +2,20 @@
 
 Runs EVERY registry key once at a small SF through the noop sink and
 prints one JSON line per key:
-{"name": ..., "build_s": ..., "exec_s": ..., "codegen_classes": ...}.
+{"name": ..., "build_s": ..., "build_jobs": ..., "exec_s": ...,
+"codegen_classes": ...}.
 `build_s` is driver-side plan-construction time (py4j/literal work —
-the §B class), `exec_s` is the noop-sink execution wall, and
+the §B class), `build_jobs` is the number of Spark jobs the builder
+fires before it returns (its eager writes, schema inference, pins;
+counted by job group), `exec_s` is the noop-sink execution wall, and
 `codegen_classes` is how many classes Janino compiled while the key was
 built and run (the count delta of Spark's `CodegenMetrics` compilation
 histogram). A final summary line lists the slowest tail by exec_s and by
-build_s, and the total of `codegen_classes`.
+build_s, and the totals of `build_jobs` and `codegen_classes`.
+
+Layouts a builder caches under `<checkout>/.scratch` survive the
+process, so a second census over the same checkout shows each key's
+steady-state `build_jobs`: the jobs it fires on every call.
 
 Each key runs once. While nothing is evicted from `get_spark`'s
 generated-class cache (`session.CODEGEN_CACHE_ENTRIES` entries) every
@@ -55,14 +62,18 @@ def main() -> None:
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles = codegen.METRIC_COMPILATION_TIME()
 
+    sc = spark.sparkContext
     rows = []
     for name in names:
-        spark.sparkContext.setJobDescription(f"census:{name}")
+        group = f"census:{name}"
+        sc.setJobGroup(group, group)
         compiled = compiles.getCount()
         t0 = time.perf_counter()
         try:
             df = registry[name].builder(spark, sf_dir)
             t1 = time.perf_counter()
+            build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            sc.setJobGroup(f"{group}:exec", group)
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
         except Exception as ex:  # noqa: BLE001 — census must finish
@@ -71,6 +82,7 @@ def main() -> None:
         row = {
             "name": name,
             "build_s": round(t1 - t0, 3),
+            "build_jobs": build_jobs,
             "exec_s": round(t2 - t1, 3),
             "codegen_classes": compiles.getCount() - compiled,
         }
@@ -86,6 +98,7 @@ def main() -> None:
         ],
         "total_exec_s": round(sum(r["exec_s"] for r in rows), 1),
         "total_build_s": round(sum(r["build_s"] for r in rows), 1),
+        "total_build_jobs": sum(r["build_jobs"] for r in rows),
         "total_codegen_classes": sum(r["codegen_classes"] for r in rows),
         "n": len(rows),
     }
